@@ -38,28 +38,24 @@ def token_hash(col: Column) -> Column:
 
 
 def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles over a token-array column. Pass a
-    BOUND column (stage the split in its own projection first):
-    codegen subexpression elimination skips lambda-bearing
-    expressions, so an inline split here would re-tokenize the text
-    once per element_at — O(tokens²) per document. Texts shorter than
-    ``n`` words yield an empty array (the sequence guard matters:
-    Spark's ``sequence(0, -k)`` counts DOWN)."""
-    idx = F.sequence(F.lit(0), F.size(toks) - n)
-    return F.when(F.size(toks) >= n, F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                "_", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)]
-            ),
-        )
-    )).otherwise(F.array().cast("array<string>"))
+    """Distinct n-word shingles over a token-array column, in
+    first-occurrence order. Linear in the token count: the ``n``
+    shifted slices are zipped outside any lambda, so ``toks`` (an
+    inline split included) is evaluated once per row. Texts shorter
+    than ``n`` words, and NULL, yield an empty array."""
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    windows = F.arrays_zip(*[F.slice(toks, j + 1, m) for j in range(n)])
+    return F.coalesce(
+        F.array_distinct(F.transform(
+            windows, lambda w: F.concat_ws("_", *[w[str(j)] for j in range(n)])
+        )),
+        F.array().cast("array<string>"),
+    )
 
 
 def shingles(col: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles of a whitespace-tokenized text (the
-    one-expression convenience form — when computing over a whole
-    DataFrame, stage the split and use :func:`shingles_from_tokens`)."""
+    """Distinct n-word shingles of a whitespace-tokenized text; linear
+    in the text length (see :func:`shingles_from_tokens`)."""
     return shingles_from_tokens(F.split(F.trim(col), "\\s+"), n)
 
 
@@ -111,29 +107,10 @@ def minhash_signatures(
     spark_parallelism = df.sparkSession.sparkContext.defaultParallelism
     # small-file inputs arrive as 1 split; spread the hash fan-out
     base = df.repartition(spark_parallelism) if df.rdd.getNumPartitions() < spark_parallelism else df
-    ex = base.select(
-        F.col(doc_id),
-        F.explode(shingles(F.col(text), shingle_size)).alias("_s"),
-    ).select(F.col(doc_id), (token_hash(F.col("_s")) % F.lit(MERSENNE31)).alias("_h"))
-    # per-function MULTIPLIER, not just offset: with a shared multiplier
-    # the permutation is monotone in _h, every component picks the same
-    # argmin shingle, and the signature degenerates to one minhash
-    # repeated k times (est_jaccard collapses to 0/1)
-    aggs = [
-        F.min(
-            (
-                F.lit(HASH_A + 2 * h) * F.col("_h")
-                + F.lit(HASH_B + HASH_STEP * h)
-            )
-            % F.lit(MERSENNE31)
-        ).alias(f"_mh{h}")
-        for h in range(num_hashes)
-    ]
-    return (
-        ex.groupBy(doc_id)
-        .agg(*aggs)
-        .select(F.col(doc_id), F.array(*[f"_mh{h}" for h in range(num_hashes)]).alias("sig"))
+    sh = base.select(
+        F.col(doc_id).alias("doc"), shingles(F.col(text), shingle_size).alias("sh")
     )
+    return _minhash_sigs_from_shingles(sh, num_hashes).withColumnRenamed("doc", doc_id)
 
 
 def lsh_candidate_pairs(
@@ -164,12 +141,11 @@ def lsh_candidate_pairs(
 
 
 def _minhash_sigs_from_shingles(sh_df: DataFrame, num_hashes: int) -> DataFrame:
-    """Signatures from a pre-staged ``(doc, sh)`` shingle-array frame —
-    the same explode → hash-once → k ``min`` aggregates as
-    :func:`minhash_signatures` (bit-identical components: the staged
-    array IS the distinct shingle set that function explodes), for
-    callers that also need the arrays themselves and must not pay a
-    second tokenize pass. Returns (doc, sig)."""
+    """Signatures from a ``(doc, sh)`` shingle-array frame: explode →
+    hash-once → k ``min`` aggregates. The one MinHash rule behind
+    :func:`minhash_signatures` and :func:`ngram_jaccard_pairs` (which
+    stages the arrays because its Jaccard verify reuses them). Returns
+    (doc, sig)."""
     # explode_OUTER + explicit null filter, NOT a plain explode: for a
     # plain explode over a staged array COLUMN, InferFiltersFromGenerate
     # adds `size(sh) > 0 AND isnotnull(sh)` and predicate pushdown
@@ -188,6 +164,10 @@ def _minhash_sigs_from_shingles(sh_df: DataFrame, num_hashes: int) -> DataFrame:
         .filter(F.col("_s").isNotNull())
         .select(F.col("doc"), (token_hash(F.col("_s")) % F.lit(MERSENNE31)).alias("_h"))
     )
+    # per-function MULTIPLIER, not just offset: with a shared multiplier
+    # the permutation is monotone in _h, every component picks the same
+    # argmin shingle, and the signature degenerates to one minhash
+    # repeated k times (est_jaccard collapses to 0/1)
     aggs = [
         F.min(
             (
@@ -669,7 +649,7 @@ def connected_components(
     shuffle; iteration stops early when labels reach a fixpoint
     (checked with a cheap aggregate, not a collect of the data).
     """
-    edges = (
+    persisted = (
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
@@ -680,9 +660,9 @@ def connected_components(
     # round is several shuffles whose task overhead dominates when the
     # data is thin. ~50k edges per partition keeps rounds single-digit
     # tasks at bench scale and thousands of tasks at 100 TB scale.
-    n_edges = edges.count()
+    n_edges = persisted.count()
     parts = int(max(1, min(n_edges // 50_000 + 1, 2048)))
-    edges = edges.repartition(parts, "b")
+    edges = persisted.repartition(parts, "b")
     # initial label: min neighbor vs self
     labels = (
         edges.repartition(parts, "a")
@@ -737,7 +717,7 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
-    edges.unpersist()
+    persisted.unpersist()
     return labels
 
 
@@ -809,6 +789,14 @@ def drop_near_duplicates(
     min over ``struct(-quality, doc)`` = quality desc, doc asc — so no
     groupBy + join-back shuffles the same keys twice. Steps 1-3 are
     the oracle-checked operators above, composed.
+
+    The input is read twice: once into a local checkpoint of the narrow
+    projection ``(doc_id, text[, quality_col])``, from which every
+    drop-set branch is built (fingerprints, pairs, the quality window),
+    and once by the output probe. An upstream chain (parse, extract,
+    redact) therefore runs twice per document, not once per branch.
+    The checkpoint holds the corpus text in executor storage until the
+    returned frame is released.
     """
     if keep not in ("min_id", "best"):
         raise ValueError(f"keep must be 'min_id' or 'best', got {keep!r}")
@@ -831,11 +819,13 @@ def drop_near_duplicates(
     # correct for string doc ids too, where a unary minus would cast
     # to double, yield null, and pick an arbitrary survivor.
 
+    q_cols = [quality_col] if keep == "best" else []
+    narrow = df.select(doc_id, text, *q_cols).localCheckpoint(eager=True)
     # exact groups: every doc whose group representative is another doc
     fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))))
     if keep == "min_id":
-        fps = df.select(F.col(doc_id).alias("doc"), fp.alias("fingerprint"))
-        exact_keep = exact_duplicates(df, text=text, doc_id=doc_id).select(
+        fps = narrow.select(F.col(doc_id).alias("doc"), fp.alias("fingerprint"))
+        exact_keep = exact_duplicates(narrow, text=text, doc_id=doc_id).select(
             "fingerprint", "keep_id"
         )
         exact_drop = (
@@ -844,7 +834,7 @@ def drop_near_duplicates(
             .select("doc")
         )
     else:
-        fps = df.select(
+        fps = narrow.select(
             F.col(doc_id).alias("doc"),
             fp.alias("fingerprint"),
             F.col(quality_col).alias("_q"),
@@ -872,7 +862,7 @@ def drop_near_duplicates(
     # minhash+LSH+Jaccard DAG executes twice (same reason
     # duplicate_clusters persists)
     pairs = ngram_jaccard_pairs(
-        df, text=text, doc_id=doc_id, n=n, threshold=threshold,
+        narrow, text=text, doc_id=doc_id, n=n, threshold=threshold,
         num_hashes=num_hashes, bands=bands,
     ).persist()
     try:
@@ -886,7 +876,7 @@ def drop_near_duplicates(
             # probed, never shuffled; then one label-window picks the
             # keeper (no groupBy + join-back pass over the same keys)
             msmall = F.broadcast(members) if broadcast_drops else members
-            mq = df.select(
+            mq = narrow.select(
                 F.col(doc_id).alias("doc"), F.col(quality_col).alias("_q")
             ).join(msmall, "doc")
             wl = Window.partitionBy("label")

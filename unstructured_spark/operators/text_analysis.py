@@ -1186,18 +1186,13 @@ def ngram_diversity(
         .groupBy(strata)
         .agg(F.sum("_np").cast("bigint").alias("total_grams"))
     )
-    # stage the split as a bound column (the lambda in shingles would
-    # otherwise re-tokenize per element — no CSE across lambdas), and
-    # explode_OUTER so no inferred size>0 filter re-inlines the
-    # shingle expression below this projection; countDistinct ignores
-    # the null rows outer emits for empty arrays
+    # explode_OUTER so no inferred size>0 filter evaluates the shingle
+    # expression a second time; countDistinct ignores the null rows
+    # outer emits for empty arrays
     dis = (
-        df.select(F.col(strata), toks.alias("_tk"))
-        .select(
+        df.select(
             F.col(strata),
-            F.explode_outer(shingles_from_tokens(F.col("_tk"), n)).alias(
-                "_g"
-            ),
+            F.explode_outer(shingles_from_tokens(toks, n)).alias("_g"),
         )
         .groupBy(strata)
         .agg(F.countDistinct("_g").cast("bigint").alias("distinct_grams"))
