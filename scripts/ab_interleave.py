@@ -127,9 +127,14 @@ def main() -> None:
         registry = importlib.reload(entry_mod).queries()
 
     def time_one(qname: str) -> float:
+        # clear the cache before each run: a frame an operator leaves
+        # cached would otherwise serve the next run of the same plan
+        # (including the other arm's timed run) without computing it
         fn = registry[qname]
+        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"ab warmup {qname}")
         fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"ab timed {qname}")
         t0 = time.monotonic()
         fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()

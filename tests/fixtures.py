@@ -290,7 +290,12 @@ def make_pdf() -> bytes:
     )
     objs.append(b"<< /Length %d >>\nstream\n%s\nendstream" % (len(c2), c2))
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    return pdf_from_objects(objs)
 
+
+def pdf_from_objects(objs: list[bytes]) -> bytes:
+    """Classic-xref PDF file from object bodies numbered 1..n; object
+    1 is the catalog."""
     buf = bytearray(b"%PDF-1.4\n")
     offsets = []
     for i, body in enumerate(objs, start=1):

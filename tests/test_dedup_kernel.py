@@ -1,6 +1,6 @@
-"""Shingle kernel against a pure-Python reference, plus the resource
-and lineage contracts of the dedup pipeline: how often
-``drop_near_duplicates`` evaluates its input, and that
+"""N-gram window kernel and shingles against a pure-Python reference,
+plus the resource and lineage contracts of the dedup pipeline: how
+often ``drop_near_duplicates`` evaluates its input, and that
 ``connected_components`` / ``drop_near_duplicates`` release what they
 persist."""
 
@@ -12,9 +12,11 @@ from pyspark.sql import functions as F
 from unstructured_spark.operators.dedup import (
     connected_components,
     drop_near_duplicates,
+    ngrams_from_tokens,
     shingles,
     shingles_from_tokens,
 )
+from unstructured_spark.operators.text_analysis import _features
 
 # Spark's F.trim strips spaces only, and Java's \s is exactly this class
 _WS = re.compile(r"[ \t\n\x0b\f\r]+")
@@ -33,39 +35,57 @@ TEXTS = [
     "x x x x x x",
     "   ",
     "\n",
+    " ".join(f"w{i % 7}" for i in range(13)),
+    " ".join(f"w{i % 9}" for i in range(40)),
 ]
 
 
+def _ref_tokens(text):
+    return None if text is None else _WS.split(text.strip(" "))
+
+
+def _ref_ngrams(text, n, sep):
+    toks = _ref_tokens(text) or []
+    return [sep.join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+
+
 def _ref_shingles(text, n):
-    if text is None:
-        return []
-    toks = _WS.split(text.strip(" "))
     out = []
-    for i in range(len(toks) - n + 1):
-        gram = "_".join(toks[i:i + n])
+    for gram in _ref_ngrams(text, n, "_"):
         if gram not in out:
             out.append(gram)
     return out
 
 
-@pytest.mark.parametrize("n", [1, 2, 3, 5])
+def _ref_features(text):
+    toks = _ref_tokens(text)
+    return None if toks is None else toks + _ref_ngrams(text, 2, "_")
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 5, 13, 15])
 def test_shingles_match_python_reference(spark, n):
     df = spark.createDataFrame(list(enumerate(TEXTS)), "id int, text string")
+    toks = F.split(F.trim(F.col("text")), "\\s+")
     rows = (
         df.select(
             "id",
             shingles(F.col("text"), n).alias("inline"),
-            shingles_from_tokens(
-                F.split(F.trim(F.col("text")), "\\s+"), n
-            ).alias("staged"),
+            shingles_from_tokens(toks, n).alias("staged"),
+            ngrams_from_tokens(toks, n, "_").alias("grams_"),
+            ngrams_from_tokens(toks, n, " ").alias("grams_sp"),
+            _features(toks).alias("features"),
         )
         .orderBy("id")
         .collect()
     )
     for r in rows:
-        want = _ref_shingles(TEXTS[r["id"]], n)
-        assert r["inline"] == want, (TEXTS[r["id"]], n)
-        assert r["staged"] == want, (TEXTS[r["id"]], n)
+        text = TEXTS[r["id"]]
+        want = _ref_shingles(text, n)
+        assert r["inline"] == want, (text, n)
+        assert r["staged"] == want, (text, n)
+        assert r["grams_"] == _ref_ngrams(text, n, "_"), (text, n)
+        assert r["grams_sp"] == _ref_ngrams(text, n, " "), (text, n)
+        assert r["features"] == _ref_features(text), text
 
 
 def _corpus(spark):

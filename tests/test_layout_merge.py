@@ -281,6 +281,21 @@ def test_merge_output_reading_order(spark):
     assert [r["box_id"] for r in out] == [0, 1, 2]
 
 
+def test_merge_exact_tie_puts_extracted_first(spark):
+    # same_region_threshold=1.0 lets an inferred box with the exact
+    # coordinates of a kept extracted image survive rule 1; with no
+    # extracted text the merge returns early, and the reading-order
+    # sort still settles the 4-coordinate tie extracted-first
+    inf = _boxes(spark, [(0, "inferred", "Figure", 100, 100, 300, 300, None)])
+    ext = _boxes(spark, [(0, "pdfminer", "Image", 100, 100, 300, 300, None)])
+    out = lm.merge_inferred_with_extracted(
+        inf, ext, 1000.0, 1000.0, same_region_threshold=1.0
+    ).collect()
+    assert [(r["source"], r["kind"]) for r in out] == [
+        ("pdfminer", "Image"), ("inferred", "Figure")
+    ]
+
+
 def test_remove_duplicate_boxes_dense_page_not_decimated(spark):
     # mirrors reference test_remove_duplicate_elements_dense_page_is_not_decimated:
     # 2500 unique non-overlapping boxes + one exact duplicate of box 0

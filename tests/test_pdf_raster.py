@@ -1,9 +1,8 @@
 """Born-digital hi_res: surrogate raster + 5-rule merge path."""
 
-from pathlib import Path
-
 import numpy as np
 
+from tests.fixtures import pdf_from_objects
 from unstructured_spark.parsers.image_parser import set_layout_model
 from unstructured_spark.parsers.pdf_parser import pdf_to_elements
 from unstructured_spark.parsers.pdf_raster import (
@@ -12,7 +11,41 @@ from unstructured_spark.parsers.pdf_raster import (
     word_boxes,
 )
 
-PDFS = Path("/root/reference/example-docs/pdf")
+_WORDS = (
+    "layout regions merge with extracted text blocks so every page keeps "
+    "its reading order while the model supplies region types"
+).split()
+
+
+def _page_stream(title: str, n_lines: int = 42) -> bytes:
+    """A 24pt title line, then ``n_lines`` full-width 12pt body lines:
+    dense enough that text covers a real share of the page."""
+    ops = [b"BT /F1 24 Tf 72 720 Td (%s) Tj /F1 12 Tf 0 -60 Td" % title.encode()]
+    for i in range(n_lines):
+        line = " ".join(_WORDS[(i + j) % len(_WORDS)] for j in range(12))
+        ops.append(b"(%s) Tj 0 -14 Td" % line.encode())
+    ops.append(b"ET")
+    return b" ".join(ops)
+
+
+def _born_digital_pdf() -> bytes:
+    """Two-page born-digital PDF (612x792pt pages, extractable text)."""
+    streams = [_page_stream("Born Digital Layout Study"), _page_stream("Results")]
+    font = 3 + 2 * len(streams)
+    kids = b" ".join(b"%d 0 R" % (3 + 2 * i) for i in range(len(streams)))
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [%s] /Count %d >>" % (kids, len(streams)),
+    ]
+    for i, stream in enumerate(streams):
+        objs.append(
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Contents %d 0 R /Resources << /Font << /F1 %d 0 R >> >> >>"
+            % (4 + 2 * i, font)
+        )
+        objs.append(b"<< /Length %d >>\nstream\n%s\nendstream" % (len(stream), stream))
+    objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    return pdf_from_objects(objs)
 
 
 class TestWordBoxes:
@@ -71,7 +104,7 @@ class TestMergeDetections:
 
 class TestBornDigitalHiRes:
     def test_end_to_end_real_pdf(self):
-        raw = (PDFS / "layout-parser-paper-fast.pdf").read_bytes()
+        raw = _born_digital_pdf()
         seen = {}
 
         def fake_layout(arr, w, h):
@@ -94,14 +127,14 @@ class TestBornDigitalHiRes:
         assert seen["dims"] == (1275, 1650)
         assert 0.05 < seen["ink"] < 0.6  # real text geometry, not blank
         full_text = " ".join(e["text"] for e in els)
-        assert "LayoutParser" in full_text
+        assert "Born Digital Layout Study" in full_text
         # the model's region types survive the merge
         assert any(e["type"] == "Title" for e in els)
 
     def test_without_model_falls_back_to_fast(self):
         # extractable text + no agents: the strategy table routes
         # hi_res to fast (unchanged behavior), no raster involved
-        raw = (PDFS / "layout-parser-paper-fast.pdf").read_bytes()
+        raw = _born_digital_pdf()
         els = pdf_to_elements(raw, strategy="hi_res")
         assert els and all(e["type"] != "Image" for e in els)
 
@@ -126,7 +159,7 @@ class TestRealRasterizerPlug:
     def test_hi_res_uses_real_pixels_when_registered(self):
         from unstructured_spark.parsers.pdf_raster import set_pdf_rasterizer
 
-        raw = (PDFS / "layout-parser-paper-fast.pdf").read_bytes()
+        raw = _born_digital_pdf()
         rast = _FakeRasterizer(value=200)
         seen = {}
 
@@ -156,7 +189,7 @@ class TestRealRasterizerPlug:
         from unstructured_spark.parsers.image_parser import set_ocr_agent
         from unstructured_spark.parsers.pdf_raster import set_pdf_rasterizer
 
-        raw = (PDFS / "layout-parser-paper-fast.pdf").read_bytes()
+        raw = _born_digital_pdf()
         rast = _FakeRasterizer()
 
         def ocr(arr, w, h):
@@ -182,7 +215,7 @@ class TestRealRasterizerPlug:
 
         from unstructured_spark.parsers.image_parser import set_ocr_agent
 
-        raw = (PDFS / "layout-parser-paper-fast.pdf").read_bytes()
+        raw = _born_digital_pdf()
         set_ocr_agent(lambda a, w, h: [])
         try:
             with pytest.raises(NotImplementedError, match="rasterizer"):

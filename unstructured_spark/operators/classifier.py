@@ -28,31 +28,10 @@ engine-portable for the oracle the same way dedup/DSIR are.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from unstructured_spark.operators.text_analysis import fxln_steps
-
-
-def _features(toks: Column) -> Column:
-    """Unigrams + joined bigrams (the DSIR feature space)."""
-    grams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
-            lambda i: F.concat_ws(
-                "_", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, grams)
-
-
-def _bucket(g: Column, buckets: int) -> Column:
-    """md5-hashed feature bucket — engine-portable (the DSIR scheme)."""
-    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint") % F.lit(
-        int(buckets)
-    )
+from unstructured_spark.operators.text_analysis import _bucket, _features, fxln_steps
 
 
 def _doc_buckets(

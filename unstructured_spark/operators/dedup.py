@@ -37,20 +37,26 @@ def token_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles over a token-array column, in
-    first-occurrence order. Linear in the token count: the ``n``
-    shifted slices are zipped outside any lambda, so ``toks`` (an
-    inline split included) is evaluated once per row. Texts shorter
-    than ``n`` words, and NULL, yield an empty array."""
+def ngrams_from_tokens(toks: Column, n: int, sep: str) -> Column:
+    """Every n-token window of a token-array column, each joined with
+    ``sep``, in position order (repeats kept). Linear in the token
+    count: the ``n`` shifted slices are zipped outside any lambda, so
+    ``toks`` (an inline split included) is evaluated once per row.
+    Total: NULL, and arrays shorter than ``n``, yield an empty array."""
     m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     windows = F.arrays_zip(*[F.slice(toks, j + 1, m) for j in range(n)])
     return F.coalesce(
-        F.array_distinct(F.transform(
-            windows, lambda w: F.concat_ws("_", *[w[str(j)] for j in range(n)])
-        )),
+        F.transform(
+            windows, lambda w: F.concat_ws(sep, *[w[str(j)] for j in range(n)])
+        ),
         F.array().cast("array<string>"),
     )
+
+
+def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
+    """Distinct n-word shingles over a token-array column, in
+    first-occurrence order (see :func:`ngrams_from_tokens`)."""
+    return F.array_distinct(ngrams_from_tokens(toks, n, "_"))
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -905,28 +911,10 @@ def _gram_hashes(toks: Column, k: int) -> Column:
     """60-bit md5 hash of each k-token window (position-ordered).
     Portable: DuckDB replays it as
     ``cast('0x'||substr(md5(array_to_string(t[i+1:i+k],' ')),1,15) as bigint)``.
-
-    TOTAL on any input: arrays shorter than ``k`` yield an empty
-    array. Callers filter ``size >= k`` anyway, but the expression
-    itself must be safe to evaluate on unfiltered rows — the optimizer
-    is free to push an inferred explode-input predicate below the
-    caller's size filter (conjunct order in a scan Filter is
-    arbitrary), and ``sequence(0, size-k)`` runs DESCENDING when
-    ``size < k``, feeding slice() a zero start and failing the whole
-    stage."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - k),
-        lambda i: F.conv(
-            F.substring(
-                F.md5(F.concat_ws(" ", F.slice(toks, i + 1, F.lit(k)))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-    )
-    return F.when(F.size(toks) >= k, grams).otherwise(
-        F.array().cast("array<bigint>")
-    )
+    Total on any input (arrays shorter than ``k`` yield an empty
+    array), so the optimizer may evaluate it below the callers' size
+    filters."""
+    return F.transform(ngrams_from_tokens(toks, k, " "), token_hash)
 
 
 def shared_ngram_spans(

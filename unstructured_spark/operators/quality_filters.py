@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from unstructured_spark.operators.dedup import ngrams_from_tokens
+
 # Gopher's "stop word presence" list (minimal English function words).
 STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with", "a", "in", "it", "on")
 
@@ -162,7 +164,7 @@ def ngram_repetition(
     - ``top_{n}gram_char_frac`` — chars covered by the single most
       frequent n-gram (count x gram length / doc length).
 
-    Plan: build gram arrays natively (slice + concat_ws — no Python),
+    Plan: build gram arrays natively (``dedup.ngrams_from_tokens``),
     explode, count per (doc, n, gram) with map-side partials, then
     reduce per doc. Shuffle keys are uniform; word-count-shaped at any
     scale. Zero-gram documents survive via explode_outer (a NULL gram
@@ -174,20 +176,11 @@ def ngram_repetition(
     base = df.select(
         F.col(doc_id).alias("doc_id"), F.length(F.trim(F.col(text))).alias("text_len"), words
     )
-    def _gram_col(n: int) -> Column:
-        def _join(i: Column) -> Column:
-            return F.concat_ws(" ", F.slice("ws", i, n))
-
-        return (
-            F.when(
-                F.size("ws") >= n,
-                F.transform(F.sequence(F.lit(1), F.size("ws") - (n - 1)), _join),
-            )
-            .otherwise(F.array().cast("array<string>"))
-            .alias(f"g{n}")
-        )
-
-    gram_arrays = base.select("doc_id", "text_len", *[_gram_col(n) for n in ns])
+    gram_arrays = base.select(
+        "doc_id",
+        "text_len",
+        *[ngrams_from_tokens(F.col("ws"), n, " ").alias(f"g{n}") for n in ns],
+    )
     stacked = gram_arrays.select(
         "doc_id",
         "text_len",

@@ -119,11 +119,6 @@ def filter_element_types(
     return df
 
 
-def render_text_expr() -> Column:
-    """Per-element text render (join with doc order for full-doc text)."""
-    return F.col("text")
-
-
 def _formula_md_expr(text: Column) -> Column:
     """Native form of the reference Formula→$$ heuristics
     (staging/base.py:90-165, behavior pinned by the facade's

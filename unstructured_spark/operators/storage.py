@@ -80,10 +80,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_exchanges(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (broadcast
     exchanges excluded — those are the cheap kind)."""

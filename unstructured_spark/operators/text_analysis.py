@@ -13,6 +13,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from unstructured_spark.operators.dedup import (
+    _gram_hashes,
+    ngrams_from_tokens,
+    shingles_from_tokens,
+    token_hash,
+)
+
 # Common English stopwords used for quality scoring.
 STOPWORDS = (
     "the a an and or of to in is are was were for with on at by from that "
@@ -143,14 +150,6 @@ def with_fxln(df: DataFrame, m: str, prefix: str) -> DataFrame:
     return df.select(*cols)
 
 
-def bpe_ish_tokens(col: Column) -> Column:
-    """A BPE-ish regex tokenization: word pieces, numbers, punctuation
-    runs (approximates GPT-2's pre-tokenizer split)."""
-    return F.regexp_extract_all(
-        col, F.lit(r"('s|'t|'re|'ve|'m|'ll|'d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+)"), 1
-    )
-
-
 def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
@@ -176,10 +175,6 @@ def stopword_ratio(col: Column) -> Column:
     sw = F.array(*[F.lit(s) for s in STOPWORDS])
     hits = F.size(F.filter(t, lambda w: F.array_contains(sw, w)))
     return hits / F.size(t)
-
-
-def punctuation_ratio(col: Column) -> Column:
-    return F.length(F.regexp_replace(col, "[^.,;:!?'\"()-]", "")) / F.length(col)
 
 
 def quality_score(col: Column) -> Column:
@@ -294,12 +289,13 @@ def winnow_fingerprints(
     k+window-1 tokens shares a fingerprint).
 
     All array expressions — whole-stage codegen, zero shuffle before
-    the final distinct. Each stage (tokens → grams → hashes → window
-    minima) is materialized as its own projection: Catalyst does NOT
-    eliminate common subexpressions across nested lambda levels, so a
-    single fused expression re-evaluates the whole hash array once per
-    window position (O(n^3) md5 calls per doc — measured 40s at
-    sf0.01; staged projections run the same data in ~1s). Hashes are
+    the final distinct. The k-gram hashes are the shared window kernel
+    (``dedup._gram_hashes``). They are materialized as their own
+    projection before the window minima: Catalyst does NOT eliminate
+    common subexpressions across nested lambda levels, so a fused
+    expression re-evaluates the whole hash array once per window
+    position (O(n^3) md5 calls per doc — measured 40s at sf0.01;
+    staged projections run the same data in ~1s). Hashes are
     md5-derived so any engine reproduces the exact fingerprint set
     (same idiom as dedup.minhash_signatures).
 
@@ -320,26 +316,7 @@ def winnow_fingerprints(
     staged = base.select(
         F.col(doc_id).alias("doc_id"), toks.alias("_t")
     ).filter(F.size("_t") >= k)
-    # greatest(...,1) keeps the sequence ascending even if a row slips
-    # past the size filter boundary at evaluation time
-    staged = staged.select(
-        "doc_id",
-        F.transform(
-            F.sequence(
-                F.lit(1), F.greatest(F.size("_t") - F.lit(k) + 1, F.lit(1))
-            ),
-            lambda i: F.concat_ws(" ", F.slice(F.col("_t"), i, k)),
-        ).alias("_g"),
-    )
-    staged = staged.select(
-        "doc_id",
-        F.transform(
-            F.col("_g"),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast(
-                "bigint"
-            ),
-        ).alias("_h"),
-    )
+    staged = staged.select("doc_id", _gram_hashes(F.col("_t"), k).alias("_h"))
     nh = F.size(F.col("_h"))
     mins = F.when(
         nh >= window,
@@ -909,6 +886,17 @@ def perplexity_buckets(
     )
 
 
+def _features(toks: Column) -> Column:
+    """Unigrams + "_"-joined bigrams: the DSIR feature space, shared
+    with the Naive-Bayes classifier."""
+    return F.concat(toks, ngrams_from_tokens(toks, 2, "_"))
+
+
+def _bucket(g: Column, buckets: int) -> Column:
+    """md5-hashed feature bucket; engine-portable."""
+    return token_hash(g) % F.lit(int(buckets))
+
+
 def dsir_importance(
     corpus: DataFrame,
     target: DataFrame,
@@ -939,27 +927,6 @@ def dsir_importance(
     Returns (doc_id, n_features, log_weight, weight).
     """
 
-    def feats(toks: Column) -> Column:
-        # toks must be a plain column reference: Catalyst does not CSE
-        # across lambda levels, so an inline split would re-tokenize
-        # once per bigram (same pitfall staged in winnow_fingerprints)
-        grams = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
-                lambda i: F.concat_ws(
-                    "_", F.element_at(toks, i), F.element_at(toks, i + 1)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        return F.concat(toks, grams)
-
-    def bucket(g: Column) -> Column:
-        return (
-            F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint")
-            % F.lit(int(buckets))
-        )
-
     def buckets_of(df: DataFrame) -> DataFrame:
         # tokenized+hashed ONCE, checkpointed: three consumers (counts,
         # totals, scoring) would otherwise each re-run the md5 explode
@@ -968,8 +935,8 @@ def dsir_importance(
         )
         return (
             df.select(F.col(doc_id).alias("doc_id"), toks.alias("_t"))
-            .select("doc_id", F.explode(feats(F.col("_t"))).alias("g"))
-            .select("doc_id", bucket(F.col("g")).alias("b"))
+            .select("doc_id", F.explode(_features(F.col("_t"))).alias("g"))
+            .select("doc_id", _bucket(F.col("g"), buckets).alias("b"))
             .localCheckpoint(eager=False)
         )
 
@@ -1176,8 +1143,6 @@ def ngram_diversity(
     both shuffles on uniform keys; nothing all-pairs. All-integer
     output (1e6*distinct div total, 0 when a stratum has no grams).
     """
-    from unstructured_spark.operators.dedup import shingles_from_tokens
-
     c = F.coalesce(F.col(text), F.lit(""))
     toks = F.split(F.trim(c), "\\s+")
     npos = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0)).cast("bigint")

@@ -21,7 +21,7 @@ TEXT comes from the content stream, not OCR. The full route is then:
 
     surrogate raster → layout model → scale boxes to PDF points →
     5-rule merge with extracted text blocks (layout_merge's
-    _merge_page_arrays, the reference's own rules) → typed elements
+    _merge_page_cols, the reference's own rules) → typed elements
 
 making ``strategy='hi_res'`` run END-TO-END on born-digital PDFs with
 a registered layout model and zero new dependencies. With poppler-real
@@ -99,61 +99,61 @@ def merge_detections_with_blocks(
     scale: float,
 ) -> list[dict]:
     """Scale pixel-space model detections to point space and run the
-    reference's 5-rule merge against the extracted text blocks.
+    reference's 5-rule merge (``layout_merge._merge_page_cols``, the
+    rule set the Spark operator runs) against the extracted text
+    blocks.
 
     ``blocks`` are ``_runs_to_blocks`` dicts (text + top-down x0, top,
     x1, bot); output rows carry (kind, text, x1, y1, x2, y2,
     is_extracted) in basic reading order.
     """
-    import pandas as pd
-
     from unstructured_spark.operators.layout_merge import (
         LAYOUT_SAME_REGION_THRESHOLD,
         LAYOUT_SUBREGION_THRESHOLD,
-        _merge_page_arrays,
+        _merge_page_cols,
     )
 
-    inf = pd.DataFrame(
-        [
-            {
-                "kind": d.get("type", "Text"),
-                "text": d.get("text"),
-                "is_extracted": "false",
-                "x1": float(d["x1"]) / scale,
-                "y1": float(d["y1"]) / scale,
-                "x2": float(d["x2"]) / scale,
-                "y2": float(d["y2"]) / scale,
-            }
-            for d in detections
-        ],
-        columns=["kind", "text", "is_extracted", "x1", "y1", "x2", "y2"],
+    # one page as the merge's column arrays: inferred rows [0, m),
+    # extracted rows [m, e)
+    m, e = len(detections), len(detections) + len(blocks)
+    kind = np.array(
+        [d.get("type", "Text") for d in detections] + ["Text"] * len(blocks),
+        dtype=object,
     )
-    ext = pd.DataFrame(
-        [
-            {
-                "kind": "Text",
-                "text": b["text"],
-                "is_extracted": "true",
-                "x1": float(b["x0"]),
-                "y1": float(b["top"]),
-                "x2": float(b["x1"]),
-                "y2": float(b["bot"]),
-            }
-            for b in blocks
-        ],
-        columns=["kind", "text", "is_extracted", "x1", "y1", "x2", "y2"],
+    text = np.array(
+        [d.get("text") for d in detections] + [b["text"] for b in blocks],
+        dtype=object,
     )
-    merged = _merge_page_arrays(
-        inf,
-        ext,
-        page_w,
-        page_h,
-        LAYOUT_SAME_REGION_THRESHOLD,
-        LAYOUT_SUBREGION_THRESHOLD,
+    isext = np.array(["false"] * m + ["true"] * len(blocks), dtype=object)
+    coords = np.array(
+        [[float(d[c]) / scale for c in ("x1", "y1", "x2", "y2")] for d in detections]
+        + [[float(b[c]) for c in ("x0", "top", "x1", "bot")] for b in blocks],
+        dtype=float,
+    ).reshape(e, 4)
+    ext_i, inf_i, inf_c, inf_t, inf_x = _merge_page_cols(
+        kind, text, isext, coords, 0, m, e, page_w, page_h,
+        LAYOUT_SAME_REGION_THRESHOLD, LAYOUT_SUBREGION_THRESHOLD,
     )
+    # kept extracted rows, then kept inferred rows (rules 2-3 may have
+    # expanded their boxes and taken extracted text)
+    out_c = np.concatenate([coords[ext_i], inf_c])
+    out_k = np.concatenate([kind[ext_i], kind[inf_i]])
+    out_t = np.concatenate([text[ext_i], inf_t])
+    out_x = np.concatenate([isext[ext_i], inf_x])
     # basic reading sort (top-left), the reference's sort_text_regions
-    merged = merged.sort_values(["y1", "x1"], kind="stable")
-    rows = merged.to_dict("records")
+    order = np.lexsort((out_c[:, 0], out_c[:, 1]))
+    rows = [
+        {
+            "kind": out_k[i],
+            "text": out_t[i],
+            "is_extracted": out_x[i],
+            "x1": float(out_c[i, 0]),
+            "y1": float(out_c[i, 1]),
+            "x2": float(out_c[i, 2]),
+            "y2": float(out_c[i, 3]),
+        }
+        for i in order
+    ]
     # rule 3 expands inferred boxes but (like the reference) drops the
     # absorbed extracted TEXT; the reference refills it with
     # aggregate_embedded_text_by_block — same here, scalar per page

@@ -221,10 +221,3 @@ CONSOLIDATION: dict[str, str] = {
     "segment_start_seconds": "FIRST",
     "segment_end_seconds": "FIRST",
 }
-
-
-def empty_element_row(doc_id: str, element_index: int, etype: str, text: str) -> dict:
-    """A full-width element row dict with all sparse fields None."""
-    row = {name: None for name in ELEMENT_COLUMNS}
-    row.update(doc_id=doc_id, element_index=element_index, type=etype, text=text)
-    return row
