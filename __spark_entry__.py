@@ -754,9 +754,10 @@ def q_partition_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_chunk_by_title(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition then chunk with the by_title strategy — the reference's
-    one-call ``partition(file, chunking_strategy='by_title')`` flow,
-    fused: the chunk fold rides the parse UDF (one stage, no doc_id
-    re-exchange; tests/test_chunking.py pins fused == unfused)."""
+    one-call ``partition(file, chunking_strategy='by_title')`` flow:
+    the chunk fold rides the parse UDF (one stage, no doc_id
+    re-exchange; tests/test_chunking.py pins it equal to
+    chunk_by_title(partition_documents(...)))."""
     from unstructured_spark.operators.partition_auto import partition_and_chunk
 
     chunks = partition_and_chunk(

@@ -89,9 +89,10 @@ def main() -> None:
 def main_streaming() -> None:
     """--streaming: the data-loader story end-to-end on a LIVE stream —
     documents arrive in a watched directory, each micro-batch is
-    parsed+chunked (zero-shuffle fused UDF), gated by the broadcast NB
-    model, and appended to token-balanced parquet shards whose
-    numbering continues across batches (streaming.pipeline.
+    parsed+chunked by the batch ``partition_and_chunk`` (zero-shuffle,
+    sort-free in-UDF fold), gated by the broadcast NB model, and
+    appended to token-balanced parquet shards whose numbering
+    continues across batches (streaming.pipeline.
     stream_to_token_shards). Prints one JSON line with shard stats."""
     import shutil
     import tempfile
@@ -110,8 +111,8 @@ def main_streaming() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     from unstructured_spark.operators.classifier import nb_train
+    from unstructured_spark.operators.partition_auto import partition_and_chunk
     from unstructured_spark.streaming.pipeline import (
-        partition_and_chunk_stream,
         read_document_stream,
         stream_to_token_shards,
     )
@@ -143,9 +144,10 @@ def main_streaming() -> None:
         ) + ("__unscored__",)
 
         t0 = time.perf_counter()
-        chunks = partition_and_chunk_stream(
+        chunks = partition_and_chunk(
             read_document_stream(spark, str(in_dir), max_files_per_trigger=64),
-            max_characters=1000,
+            chunking_strategy="by_title",
+            chunk_kwargs={"max_characters": 1000},
         )
         q = stream_to_token_shards(
             chunks,

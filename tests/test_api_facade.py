@@ -6,10 +6,10 @@ operator path."""
 
 import io
 import json
-from pathlib import Path
 
 import pytest
 
+from tests import fixtures as fx
 from unstructured_spark.api import (
     Element,
     chunk_by_title,
@@ -23,20 +23,50 @@ from unstructured_spark.api import (
     partition_text,
 )
 
-DOCS = Path("/root/reference/example-docs")
+# in-repo stand-ins for the reference's example-docs: fake-text.txt,
+# fake.docx, and a long multi-paragraph text for the chunking tests
+LONG_TEXT = "\n\n".join(
+    f"Part {i}\n\n"
+    + " ".join(f"Sentence {j} of part {i} carries the long story onward." for j in range(9))
+    for i in range(12)
+)
+
+
+@pytest.fixture
+def fake_text(tmp_path):
+    path = tmp_path / "fake-text.txt"
+    path.write_text(fx.FAKE_TEXT)
+    return str(path)
+
+
+@pytest.fixture
+def long_text(tmp_path):
+    path = tmp_path / "long-text.txt"
+    path.write_text(LONG_TEXT)
+    return str(path)
 
 
 class TestPartitionSources:
-    def test_filename(self):
-        els = partition(filename=str(DOCS / "fake-text.txt"))
+    def test_filename(self, fake_text):
+        els = partition(filename=fake_text)
         assert els and all(isinstance(e, Element) for e in els)
         assert els[0].text
         assert str(els[0]) == els[0].text
 
     def test_file_object(self):
-        raw = (DOCS / "fake.docx").read_bytes()
+        raw = fx.make_docx()
         els = partition(file=io.BytesIO(raw), metadata_filename="fake.docx")
-        assert [e.text for e in els] == ["Lorem ipsum dolor sit amet."]
+        assert [e.text for e in els] == [
+            "Confidential Header",
+            "Report Title",
+            "This is a narrative paragraph that was written for the report. bold words",
+            "item one",
+            "nested item",
+            "Name Qty\nspam 42",
+            "",
+            "Second page text appears here. It is still narrative prose.",
+            "Page Footer",
+        ]
         assert all(e.metadata.filename == "fake.docx" for e in els)
 
     def test_text_kwarg(self):
@@ -49,32 +79,59 @@ class TestPartitionSources:
         with pytest.raises(ValueError, match="Exactly one"):
             partition(filename="x.txt", text="also text")
 
-    def test_ids_and_languages_finalized(self):
-        els = partition(filename=str(DOCS / "fake-text.txt"))
+    def test_ids_and_languages_finalized(self, fake_text):
+        els = partition(filename=fake_text)
         assert all(e.id and len(e.id) == 32 for e in els)
         assert all(e.metadata.languages == ["eng"] for e in els)
         assert len({e.id for e in els}) == len(els)
 
-    def test_matches_spark_operator_path(self, spark):
-        """The facade and partition_documents produce identical rows."""
+    def test_matches_spark_operator_path(self, spark, tmp_path):
+        """The facade, partition_documents and SQL partition_doc produce
+        identical rows for the same file under a directory path."""
         from unstructured_spark.operators.partition_auto import partition_documents
+        from unstructured_spark.sql_surface import register_sql_surface
 
-        name = "fake-email.eml" if (DOCS / "fake-email.eml").exists() else "fake-text.txt"
-        raw = (DOCS / name).read_bytes()
+        in_dir = tmp_path / "in"
+        in_dir.mkdir()
+        inputs = {
+            "fake-text.txt": fx.FAKE_TEXT.encode(),
+            "fake-email.eml": fx.FAKE_EMAIL.encode(),
+            "fake.docx": fx.make_docx(),
+            "fake-html.html": fx.FAKE_HTML.encode(),
+        }
+        docs = []
+        for name, raw in inputs.items():
+            (in_dir / name).write_bytes(raw)
+            docs.append((str(in_dir / name), str(in_dir / name), bytearray(raw), None))
         df = spark.createDataFrame(
-            [(name, name, bytearray(raw), None)],
-            "doc_id string, path string, content binary, content_type string",
+            docs, "doc_id string, path string, content binary, content_type string"
         )
-        spark_rows = (
+        paths = [d[0] for d in docs]
+        register_sql_surface(spark)
+        df.createOrReplaceTempView("facade_parity_docs")
+        sql_rows = spark.sql(
+            "SELECT d.path, p.element_index, p.element_id, p.type, p.text "
+            "FROM facade_parity_docs d, LATERAL partition_doc(d.content, d.path) p"
+        ).collect()
+        operator_rows = (
             partition_documents(df)
-            .select("element_id", "type", "text")
-            .orderBy("element_index")
+            .select("doc_id", "element_index", "element_id", "type", "text")
             .collect()
         )
-        local = partition(filename=str(DOCS / name), metadata_filename=name)
-        assert [(e.id, e.category, e.text) for e in local] == [
-            (r.element_id, r.type, r.text) for r in spark_rows
-        ]
+
+        def per_doc(rows, path):
+            return [
+                (r.element_id, r.type, r.text)
+                for r in sorted(rows, key=lambda r: r.element_index)
+                if r[0] == path
+            ]
+
+        for path in paths:
+            local = partition(filename=path)
+            facade = [(e.id, e.category, e.text) for e in local]
+            assert facade, path
+            assert facade == per_doc(operator_rows, path), path
+            assert facade == per_doc(sql_rows, path), path
 
 
 class TestFormatWrappers:
@@ -86,23 +143,25 @@ class TestFormatWrappers:
         els = partition_text(text="one paragraph\n\nanother paragraph")
         assert len(els) == 2
 
-    def test_partition_docx_file(self):
-        els = partition_docx(filename=str(DOCS / "fake.docx"))
-        assert els and els[0].text == "Lorem ipsum dolor sit amet."
+    def test_partition_docx_file(self, tmp_path):
+        path = tmp_path / "fake.docx"
+        path.write_bytes(fx.make_docx())
+        els = partition_docx(filename=str(path))
+        assert els and els[0].text == "Confidential Header"
 
 
 class TestChunkingIntegration:
-    def test_partition_with_chunking_strategy(self):
+    def test_partition_with_chunking_strategy(self, long_text):
         els = partition(
-            filename=str(DOCS / "book-war-and-peace-1p.txt"),
+            filename=long_text,
             chunking_strategy="basic",
             max_characters=300,
         )
         assert els and all(e.category in ("CompositeElement", "Table", "TableChunk") for e in els)
         assert all(len(e.text) <= 300 for e in els)
 
-    def test_chunk_elements_roundtrip(self):
-        base = partition(filename=str(DOCS / "book-war-and-peace-1p.txt"))
+    def test_chunk_elements_roundtrip(self, long_text):
+        base = partition(filename=long_text)
         chunks = chunk_elements(base, max_characters=200)
         assert "".join(c.text for c in chunks).startswith(base[0].text[:50])
 
@@ -116,8 +175,8 @@ class TestChunkingIntegration:
 
 
 class TestStaging:
-    def test_json_round_trip(self, tmp_path):
-        els = partition(filename=str(DOCS / "fake-text.txt"))
+    def test_json_round_trip(self, tmp_path, fake_text):
+        els = partition(filename=fake_text)
         p = tmp_path / "els.json"
         assert elements_to_json(els, filename=str(p)) is None
         back = elements_from_json(filename=str(p))
@@ -129,8 +188,8 @@ class TestStaging:
         assert d["type"] == "UncategorizedText"
         assert Element.from_dict(d).category == "Text"
 
-    def test_convert_to_dict_matches_reference_shape(self):
-        els = partition(filename=str(DOCS / "fake-text.txt"))
+    def test_convert_to_dict_matches_reference_shape(self, fake_text):
+        els = partition(filename=fake_text)
         d = convert_to_dict(els)[0]
         assert set(d) == {"type", "element_id", "text", "metadata"}
         assert d["metadata"]["filename"] == "fake-text.txt"

@@ -204,7 +204,10 @@ class TestSparkChunking:
     def test_fused_partition_and_chunk_matches_operator_path(self, spark):
         # the fused one-call flow (chunk fold inside the parse UDF) must
         # be row-identical to partition → exchange → chunk_by_title
-        from unstructured_spark.operators.partition_auto import partition_and_chunk
+        from unstructured_spark.operators.partition_auto import (
+            partition_and_chunk,
+            partition_documents,
+        )
 
         docs = spark.createDataFrame(
             [
@@ -219,9 +222,7 @@ class TestSparkChunking:
         fused = partition_and_chunk(
             docs, chunking_strategy="by_title", chunk_kwargs=kw
         ).select(*cols)
-        unfused = partition_and_chunk(
-            docs, chunking_strategy="by_title", chunk_kwargs=kw, fused=False
-        ).select(*cols)
+        unfused = chunk_by_title(partition_documents(docs), **kw).select(*cols)
         assert sorted(map(tuple, fused.collect())) == sorted(
             map(tuple, unfused.collect())
         )
@@ -230,7 +231,10 @@ class TestSparkChunking:
         # on_error='capture' synthesizes type='Error' rows; both paths
         # must pass them through VERBATIM (the unfused fold used to eat
         # them into CompositeElements — round-9 advisory fix)
-        from unstructured_spark.operators.partition_auto import partition_and_chunk
+        from unstructured_spark.operators.partition_auto import (
+            partition_and_chunk,
+            partition_documents,
+        )
 
         docs = spark.createDataFrame(
             [
@@ -243,8 +247,8 @@ class TestSparkChunking:
         fused = partition_and_chunk(
             docs, chunking_strategy="by_title", on_error="capture"
         ).select(*cols)
-        unfused = partition_and_chunk(
-            docs, chunking_strategy="by_title", on_error="capture", fused=False
+        unfused = chunk_by_title(
+            partition_documents(docs, on_error="capture")
         ).select(*cols)
         frows = sorted(map(tuple, fused.collect()))
         urows = sorted(map(tuple, unfused.collect()))

@@ -125,8 +125,15 @@ class TestMultimodal:
 
 class TestStreaming:
     def test_stream_partition_and_chunk(self, spark, tmp_path):
+        # a stream runs the batch partition_and_chunk unchanged: its
+        # sort-free in-UDF fold must give exactly the rows of the batch
+        # partition → exchange → chunk_by_title path over the same files
+        from unstructured_spark.operators.chunking import chunk_by_title
+        from unstructured_spark.operators.partition_auto import (
+            partition_and_chunk,
+            partition_documents,
+        )
         from unstructured_spark.streaming import (
-            partition_and_chunk_stream,
             read_document_stream,
             write_elements_stream,
         )
@@ -135,19 +142,21 @@ class TestStreaming:
         in_dir.mkdir()
         (in_dir / "a.txt").write_text(fx.FAKE_TEXT)
         (in_dir / "b.html").write_text(fx.FAKE_HTML)
+        kw = {"max_characters": 200}
 
-        docs = read_document_stream(spark, str(in_dir))
-        assert docs.isStreaming
-        chunks = partition_and_chunk_stream(docs, max_characters=200)
-        q = write_elements_stream(
-            chunks,
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        q.awaitTermination(120)
-        out = spark.read.parquet(str(tmp_path / "out"))
-        rows = out.collect()
+        def drain():
+            docs = read_document_stream(spark, str(in_dir))
+            assert docs.isStreaming
+            q = write_elements_stream(
+                partition_and_chunk(docs, chunking_strategy="by_title", chunk_kwargs=kw),
+                str(tmp_path / "out"),
+                str(tmp_path / "ckpt"),
+                available_now=True,
+            )
+            q.awaitTermination(120)
+            return spark.read.parquet(str(tmp_path / "out"))
+
+        rows = drain().collect()
         assert len(rows) >= 2
         assert set(r["type"] for r in rows) <= {"CompositeElement", "Table", "TableChunk"}
         docs_seen = {r["doc_id"] for r in rows}
@@ -156,15 +165,33 @@ class TestStreaming:
 
         # arriving file picked up by a second availableNow drain
         (in_dir / "c.txt").write_text("New arrival paragraph. It was late.")
-        q2 = write_elements_stream(
-            partition_and_chunk_stream(read_document_stream(spark, str(in_dir)), max_characters=200),
-            str(tmp_path / "out"),
-            str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        q2.awaitTermination(120)
-        out2 = spark.read.parquet(str(tmp_path / "out"))
+        out2 = drain()
         assert any("c.txt" in r["doc_id"] for r in out2.collect())
+
+        batch_docs = spark.read.format("binaryFile").load(str(in_dir)).select(
+            F.col("path").alias("doc_id"), "path", "content"
+        )
+        batch = chunk_by_title(partition_documents(batch_docs), **kw)
+
+        def keyed(df):
+            return sorted(
+                (r.asDict(recursive=True) for r in df.collect()),
+                key=lambda d: (d["doc_id"], d["element_index"]),
+            )
+
+        # small Arrow batches make the batch fold carry documents across
+        # batch boundaries, which the in-UDF fold never has to do
+        prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+        try:
+            expected = keyed(batch)
+        finally:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+        assert out2.columns == batch.columns
+        assert keyed(out2) == expected
+        assert {d["doc_id"].rsplit("/", 1)[-1] for d in expected} == {
+            "a.txt", "b.html", "c.txt"
+        }
 
 
 class TestStreamingDataLoader:
@@ -173,8 +200,8 @@ class TestStreamingDataLoader:
         # NB gate → token-balanced shards, with shard numbering
         # CONTINUING across a second availableNow drain
         from unstructured_spark.operators.classifier import nb_train
+        from unstructured_spark.operators.partition_auto import partition_and_chunk
         from unstructured_spark.streaming.pipeline import (
-            partition_and_chunk_stream,
             read_document_stream,
             stream_to_token_shards,
         )
@@ -202,8 +229,10 @@ class TestStreamingDataLoader:
         out_dir, ckpt = str(tmp_path / "shards"), str(tmp_path / "ckpt")
 
         def drain():
-            chunks = partition_and_chunk_stream(
-                read_document_stream(spark, str(in_dir)), max_characters=200
+            chunks = partition_and_chunk(
+                read_document_stream(spark, str(in_dir)),
+                chunking_strategy="by_title",
+                chunk_kwargs={"max_characters": 200},
             )
             q = stream_to_token_shards(
                 chunks, model, out_dir, ckpt,

@@ -95,7 +95,11 @@ class TestSqlSurface:
 
         register_sql_surface(spark)
         docs = spark.createDataFrame(
-            [("d1", bytearray(fx.FAKE_TEXT.encode()), "d1.txt")],
+            [
+                ("d1", bytearray(fx.FAKE_TEXT.encode()), "d1.txt"),
+                # malformed input follows on_error='skip': no rows
+                ("bad", bytearray(b"\xd0\xcf\x11\xe0 truncated cfb"), "broken.doc"),
+            ],
             "doc_id string, content binary, path string",
         )
         docs.createOrReplaceTempView("sql_docs")
@@ -104,6 +108,7 @@ class TestSqlSurface:
             "FROM sql_docs d, LATERAL partition_doc(d.content, d.path) p "
             "ORDER BY p.element_index"
         ).collect()
+        assert {r["doc_id"] for r in out} == {"d1"}
         assert len(out) > 3
         assert out[0]["type"] == "Title"
         assert all(len(r["element_id"]) == 32 for r in out)
@@ -127,13 +132,15 @@ class TestChunkDocTvf:
         register_sql_surface(spark)
         body = ("Section One\n\n" + "word " * 120 + "\n\nSection Two\n\n" + "tail " * 40).encode()
         spark.createDataFrame(
-            [("d1", bytearray(body), "a.txt")],
+            # an empty document has no elements and so no chunks
+            [("d1", bytearray(body), "a.txt"), ("empty", bytearray(b""), "e.txt")],
             "doc_id string, content binary, path string",
         ).createOrReplaceTempView("docs_for_chunk")
         rows = spark.sql(
             "SELECT d.doc_id, c.* FROM docs_for_chunk d, "
             "LATERAL chunk_doc(d.content, d.path, 200) c"
         ).collect()
+        assert {r["doc_id"] for r in rows} == {"d1"}
         assert len(rows) > 2
         assert all(len(r["text"]) <= 200 for r in rows)
         assert [r["chunk_index"] for r in rows] == list(range(len(rows)))

@@ -12,9 +12,9 @@ dispatch so single-document workloads port with an import swap
 ``documents/elements.py:150-487,585-701`` for the Element/metadata
 surface, ``staging/base.py:263-478`` for the JSON staging helpers).
 The heavy lifting is the exact same code the Spark operators run
-executor-side (``parsers.dispatch.partition_bytes`` +
-``operators.metadata.py_finalize_doc`` + the chunking fold), so local
-results match a ``partition_documents`` DataFrame row-for-row.
+executor-side (``operators.partition_auto.document_rows`` + the
+chunking fold), so local results match a ``partition_documents``
+DataFrame row-for-row.
 
 This facade is intentionally driver-local: one process, one document.
 The distributed path for corpora is ``operators.partition_auto
@@ -187,8 +187,7 @@ def partition(
     (auto.py:30-300). Dispatch, parsing, metadata finalization and the
     optional chunking fold are the same functions the Spark operators
     run executor-side."""
-    from unstructured_spark.operators.metadata import py_finalize_doc
-    from unstructured_spark.parsers.dispatch import partition_bytes
+    from unstructured_spark.operators.partition_auto import document_rows
 
     data, name, ctype = _read_source(
         filename, file, text, url, headers, request_timeout, content_type
@@ -201,24 +200,14 @@ def partition(
         parser_kwargs["extract_forms"] = True
     if extract_images_in_pdf:
         parser_kwargs["extract_images"] = True
-    els = partition_bytes(
+    rows = document_rows(
         data,
-        filename=display_name,
+        doc_id=display_name or "document",
+        path=display_name,
         content_type=ctype,
         html_parser_version=html_parser_version,
         **parser_kwargs,
     )
-    rows: list[dict] = []
-    for idx, el in enumerate(els):
-        row = {c: None for c in _ROW_COLUMNS}
-        row.update({k: v for k, v in el.items() if k in row})
-        row["doc_id"] = display_name or "document"
-        row["element_index"] = idx
-        row["text"] = el.get("text", "")
-        row["type"] = el.get("type", "Text")
-        rows.append(row)
-    base = (display_name or "").rsplit("/", 1)[-1] or None
-    py_finalize_doc(rows, doc_id=display_name or "document", filename=base)
     if chunking_strategy is not None:
         rows = _chunk_rows(rows, chunking_strategy, **chunking_kwargs)
     return [Element.from_row(r) for r in rows]

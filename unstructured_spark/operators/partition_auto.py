@@ -29,6 +29,42 @@ from unstructured_spark.schema import ELEMENT_SCHEMA
 _OUT_COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
 
 
+def document_rows(
+    raw,
+    *,
+    doc_id: str,
+    path: str | None = None,
+    content_type: str | None = None,
+    **parser_kwargs,
+) -> list[dict]:
+    """One document's bytes → its finalized element rows over the
+    ``ELEMENT_SCHEMA`` columns: parse, number the elements in reading
+    order, then hash ids, doc language and hierarchy. Element ids hash
+    the basename of ``path``, so the same bytes get the same ids from
+    every surface (operator, facade, SQL) whatever directory they sit
+    in. Bad input raises ``UnsupportedFormatError`` / ``ValueError``
+    (the dispatch contract); each caller decides what that means."""
+    # call-time imports: executors import parsers lazily, and per-layer
+    # timing wraps these module attributes
+    from unstructured_spark.operators.metadata import py_finalize_doc
+    from unstructured_spark.parsers.dispatch import partition_bytes
+
+    els = partition_bytes(
+        raw, filename=path, content_type=content_type, **parser_kwargs
+    )
+    rows: list[dict] = []
+    for idx, el in enumerate(els):
+        row = {c: None for c in _OUT_COLUMNS}
+        row.update({k: v for k, v in el.items() if k in row})
+        row["doc_id"] = doc_id
+        row["element_index"] = idx
+        row["text"] = el.get("text", "")
+        row["type"] = el.get("type", "Text")
+        rows.append(row)
+    base = (path or "").rsplit("/", 1)[-1] or None
+    return py_finalize_doc(rows, doc_id=doc_id, filename=base)
+
+
 def partition_documents(
     df: DataFrame,
     *,
@@ -37,19 +73,17 @@ def partition_documents(
     path: str | None = "path",
     content_type: str | None = "content_type",
     on_error: str = "skip",  # 'skip' | 'fail' | 'capture'
-    apply_metadata: bool = True,
-    num_partitions: int | None = None,
     per_doc_transform=None,
     **parser_kwargs,
 ) -> DataFrame:
     """Partition a documents DataFrame into the canonical element schema.
 
     Metadata finalization (hash ids, doc language, hierarchy) happens
-    INSIDE the parse UDF: a document is fully contained in one input
-    row, so these are per-row pure functions — zero shuffles for the
-    whole partition+metadata pipeline (the separate DataFrame operators
-    in ``operators.metadata`` each cost an exchange and exist for
-    element tables read back from storage).
+    INSIDE the parse UDF (``document_rows``): a document is fully
+    contained in one input row, so these are per-row pure functions —
+    zero shuffles for the whole partition+metadata pipeline (the
+    separate DataFrame operators in ``operators.metadata`` each cost an
+    exchange and exist for element tables read back from storage).
 
     Extra ``parser_kwargs`` flow through ``partition_bytes`` to the
     per-format partitioners (e.g. ``strategy=``, ``extract_forms=``,
@@ -72,7 +106,7 @@ def partition_documents(
     # equals input partitions, and a single parquet file is one split.
     # (streaming microbatches manage their own partitioning — no .rdd)
     if not df.isStreaming:
-        target = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+        target = df.sparkSession.sparkContext.defaultParallelism
         if narrowed.rdd.getNumPartitions() < target:
             narrowed = narrowed.repartition(target)
     path_col = path if path in narrowed.columns else None
@@ -80,12 +114,8 @@ def partition_documents(
 
     def parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # executor-side import keeps parser modules out of the driver path
-        from unstructured_spark.operators.metadata import py_finalize_doc
         from unstructured_spark.parsers import classify
-        from unstructured_spark.parsers.dispatch import (
-            UnsupportedFormatError,
-            partition_bytes,
-        )
+        from unstructured_spark.parsers.dispatch import UnsupportedFormatError
 
         for pdf in batches:
             rows: list[dict] = []
@@ -95,12 +125,14 @@ def partition_documents(
             with classify.env_snapshot():
                 for rec in pdf.itertuples(index=False):
                     rec_d = rec._asdict()
-                    raw = rec_d[content]
+                    did = str(rec_d[doc_id])
                     fname = rec_d.get(path_col) if path_col else None
-                    ctype = rec_d.get(ct_col) if ct_col else None
                     try:
-                        els = partition_bytes(
-                            raw, filename=fname, content_type=ctype,
+                        doc_rows = document_rows(
+                            rec_d[content],
+                            doc_id=did,
+                            path=fname,
+                            content_type=rec_d.get(ct_col) if ct_col else None,
                             **parser_kwargs,
                         )
                     except (RecursionError, MemoryError):
@@ -121,7 +153,7 @@ def partition_documents(
                             # not silently vanished
                             row = {c: None for c in _OUT_COLUMNS}
                             row.update(
-                                doc_id=str(rec_d[doc_id]),
+                                doc_id=did,
                                 element_index=0,
                                 type="Error",
                                 text=f"{type(e).__name__}: {e}",
@@ -129,21 +161,6 @@ def partition_documents(
                             )
                             rows.append(row)
                         continue
-                    did = str(rec_d[doc_id])
-                    doc_rows: list[dict] = []
-                    for idx, el in enumerate(els):
-                        row = {c: None for c in _OUT_COLUMNS}
-                        row.update(
-                            {k: v for k, v in el.items() if k in row}
-                        )
-                        row["doc_id"] = did
-                        row["element_index"] = idx
-                        row["text"] = el.get("text", "")
-                        row["type"] = el.get("type", "Text")
-                        doc_rows.append(row)
-                    if apply_metadata and doc_rows:
-                        base = (fname or "").rsplit("/", 1)[-1] or None
-                        py_finalize_doc(doc_rows, doc_id=did, filename=base)
                     if per_doc_transform is not None and doc_rows:
                         doc_rows = per_doc_transform(doc_rows)
                     rows.extend(doc_rows)
@@ -161,22 +178,21 @@ def partition_and_chunk(
     *,
     chunking_strategy: str | None = None,
     chunk_kwargs: dict | None = None,
-    fused: bool = True,
     **partition_kwargs,
 ):
     """The reference's one-call flow ``partition(file,
     chunking_strategy=...)`` (auto.py:30-300): partition to elements,
-    then dispatch to a chunking strategy.
+    then dispatch to a chunking strategy. Serves batch and streaming
+    frames alike.
 
-    ``fused=True`` (default) runs the built-in chunk folds INSIDE the
-    parse UDF via ``per_doc_transform``: a document's elements never
-    leave the worker between partition and chunk, so the pipeline is a
-    single shuffle-free stage with one Arrow round-trip (vs. parse →
-    exchange on doc_id → sort → second Python pass). Identical output
-    by construction — the fold is the same ``_chunk_doc`` the operator
-    path runs, and it only ever needs one document's rows. Plug-in
-    strategies (registered via ``register_chunking_strategy``) operate
-    on DataFrames and always take the unfused path.
+    The built-in ``basic`` / ``by_title`` folds run INSIDE the parse
+    UDF via ``per_doc_transform``: one shuffle-free, sort-free stage
+    with one Arrow round-trip, which is also what lets it run on a
+    stream (``chunk`` sorts, and streams cannot). The fold is the same
+    ``_chunk_doc`` that ``chunk`` runs, so the rows equal
+    ``chunk(partition_documents(df), ...)``. Plug-in strategies
+    (registered via ``register_chunking_strategy``) operate on
+    DataFrames and take the ``chunk`` path.
     """
     from unstructured_spark.operators.chunking import (
         _STRATEGIES,
@@ -189,16 +205,12 @@ def partition_and_chunk(
 
     if chunking_strategy is None:
         return partition_documents(df, **partition_kwargs)
-    # fuse ONLY while the registered strategy is still the built-in
-    # function: a caller who re-registers 'basic'/'by_title' via
-    # register_chunking_strategy must get their plug-in, not a silent
-    # built-in fold
-    builtin = {"basic": chunk_elements, "by_title": chunk_by_title}
-    if (
-        fused
-        and chunking_strategy in builtin
-        and _STRATEGIES.get(chunking_strategy) is builtin[chunking_strategy]
-    ):
+    # fold in-UDF ONLY while the registered strategy is still the
+    # built-in function: a caller who re-registers 'basic'/'by_title'
+    # via register_chunking_strategy must get their plug-in, not a
+    # silent built-in fold
+    builtin = {"basic": chunk_elements, "by_title": chunk_by_title}.get(chunking_strategy)
+    if builtin is not None and _STRATEGIES.get(chunking_strategy) is builtin:
         opts = ChunkingOptions(**(chunk_kwargs or {}))
         by_title = chunking_strategy == "by_title"
 

@@ -141,6 +141,15 @@ def gopher_keep_expr(
     )
 
 
+def gopher_filter(df: DataFrame, **keep_kwargs) -> DataFrame:
+    """Keep the rows of ``df`` whose ``text`` column passes
+    ``gopher_keep_expr(**keep_kwargs)``; the stat columns are projected
+    once for the filter and dropped again. Zero shuffles."""
+    stats = {**gopher_stats_exprs("text"), **line_repetition_exprs("text")}
+    with_stats = df.select("*", *[c.alias(n) for n, c in stats.items()])
+    return with_stats.filter(gopher_keep_expr(**keep_kwargs)).drop(*stats.keys())
+
+
 def gopher_quality(df: DataFrame, text: str = "text", doc_id: str = "doc_id") -> DataFrame:
     """Per-document Gopher quality stats + keep flag. Zero shuffles."""
     stats = df.select(

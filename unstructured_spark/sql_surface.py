@@ -26,37 +26,27 @@ class PartitionDocUdtf:
     the SQL analog of the ``partition_documents`` operator)."""
 
     def eval(self, content, filename=None):  # noqa: D102
-        from unstructured_spark.operators.metadata import py_finalize_doc
-        from unstructured_spark.parsers.dispatch import partition_bytes
-
-        if content is None:
-            return
-        raw = bytes(content) if not isinstance(content, (bytes, str)) else content
-        try:
-            els = partition_bytes(raw, filename=filename)
-        except Exception:
-            return
-        rows = []
-        for i, el in enumerate(els):
-            rows.append(
-                {
-                    "element_index": i,
-                    "type": el.get("type", "Text"),
-                    "text": el.get("text", ""),
-                    "page_number": el.get("page_number"),
-                    "category_depth": el.get("category_depth"),
-                    "parent_id": el.get("parent_id"),
-                    "languages": el.get("languages"),
-                    "element_id": el.get("element_id"),
-                }
-            )
-        py_finalize_doc(rows, doc_id=filename or "doc", filename=filename)
-        for r in rows:
+        for r in _udtf_rows(content, filename):
             yield (
                 r["element_index"], r["element_id"], r["type"], r["text"],
-                r.get("page_number"), r.get("category_depth"),
-                r.get("parent_id"), r.get("languages"),
+                r["page_number"], r["category_depth"], r["parent_id"],
+                r["languages"],
             )
+
+
+def _udtf_rows(content, filename) -> list[dict]:
+    """``document_rows`` for one SQL row; malformed or unsupported
+    bytes yield no rows (the ``on_error='skip'`` contract)."""
+    from unstructured_spark.operators.partition_auto import document_rows
+    from unstructured_spark.parsers.dispatch import UnsupportedFormatError
+
+    if content is None:
+        return []
+    raw = bytes(content) if not isinstance(content, (bytes, str)) else content
+    try:
+        return document_rows(raw, doc_id=filename or "doc", path=filename)
+    except (UnsupportedFormatError, ValueError):
+        return []
 
 
 def register_sql_surface(spark: SparkSession) -> None:
@@ -106,29 +96,11 @@ class ChunkDocUdtf:
     """
 
     def eval(self, content, filename=None, max_characters: int = 500):  # noqa: D102
-        if content is None:
-            return
         from unstructured_spark.api import _chunk_rows
-        from unstructured_spark.operators.metadata import py_finalize_doc
-        from unstructured_spark.parsers.dispatch import partition_bytes
-        from unstructured_spark.schema import ELEMENT_SCHEMA
 
-        cols = [f.name for f in ELEMENT_SCHEMA.fields]
-        raw = bytes(content) if not isinstance(content, (bytes, str)) else content
-        try:
-            els = partition_bytes(raw, filename=filename)
-        except Exception:
+        rows = _udtf_rows(content, filename)
+        if not rows:
             return
-        rows = []
-        for i, el in enumerate(els):
-            row = {c: None for c in cols}
-            row.update({k: v for k, v in el.items() if k in row})
-            row["doc_id"] = filename or "doc"
-            row["element_index"] = i
-            row["text"] = el.get("text", "")
-            row["type"] = el.get("type", "Text")
-            rows.append(row)
-        py_finalize_doc(rows, doc_id=filename or "doc", filename=filename)
         chunks = _chunk_rows(rows, "by_title", max_characters=int(max_characters))
         for i, ch in enumerate(chunks):
             yield (

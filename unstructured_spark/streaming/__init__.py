@@ -1,6 +1,5 @@
 from unstructured_spark.streaming.pipeline import (  # noqa: F401
     main_content_stream,
-    partition_and_chunk_stream,
     partition_stream,
     read_document_stream,
     warc_record_stream,

@@ -10,8 +10,9 @@ needed because a document is fully contained in one input row.
 Chunking inside a stream: ``groupBy().applyInPandas`` /
 ``sortWithinPartitions`` are not available on unaggregated streams, but
 chunking is per-document and the parse UDF already holds the whole
-document — so the streaming pipeline runs the chunk fold *inside the
-same pass* (zero extra shuffle, stateless microbatches).
+document — so a stream calls the batch ``partition_and_chunk``
+unchanged, whose chunk fold runs *inside the same pass* (zero extra
+shuffle, no sort, stateless microbatches).
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from unstructured_spark.operators.partition_auto import partition_documents
-from unstructured_spark.schema import ELEMENT_SCHEMA
 
 
 def read_document_stream(
@@ -56,33 +56,6 @@ def partition_stream(docs: DataFrame) -> DataFrame:
     """Streaming elements DataFrame — the identical parse operator as
     batch (stateless mapInPandas works unchanged in a stream)."""
     return partition_documents(docs)
-
-
-def partition_and_chunk_stream(
-    docs: DataFrame,
-    *,
-    by_title: bool = True,
-    **chunk_kwargs,
-) -> DataFrame:
-    """Parse AND chunk each arriving document in one UDF pass.
-
-    The chunk fold needs the whole ordered document, which the parse
-    UDF already has per input row — fusing them avoids the shuffle that
-    batch chunking uses and sidesteps streaming's no-sort rule.
-    """
-    from unstructured_spark.operators.chunking import (
-        ChunkingOptions,
-        _make_batched_fold,
-    )
-
-    opts = ChunkingOptions(**chunk_kwargs)
-    elements = partition_documents(docs)
-    # parse output is doc-contiguous and ordered within each partition,
-    # which is all the batched fold needs; its carry-buffer handles docs
-    # that straddle Arrow batch boundaries between the two UDF nodes
-    return elements.mapInPandas(
-        _make_batched_fold(opts, by_title), schema=ELEMENT_SCHEMA
-    )
 
 
 def _sink_has_part_files(spark: SparkSession, path: str) -> bool:
