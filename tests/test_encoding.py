@@ -1,17 +1,42 @@
-"""Encoding detection (parsers/encoding.py) vs the reference's
-utf-16/utf-32 example-docs (file_utils/encoding.py behavioral parity)."""
-
-from pathlib import Path
+"""Encoding detection (parsers/encoding.py) on documents shaped like
+the reference's utf-16/utf-32/latin-1 example-docs, built in memory
+(file_utils/encoding.py behavioral parity)."""
 
 import pytest
 
+from tests import fixtures as fx
 from unstructured_spark.parsers.encoding import decode_bytes, detect_encoding
 
-DOCS = Path("/root/reference/example-docs")
+_TEXT = "This is a test document to use for unit tests.\n\n" + fx.FAKE_TEXT
+_HTML = (
+    "<!DOCTYPE html>\n<html><head><meta charset=\"utf-16\">"
+    "<title>Steel JIS datasheet</title></head>\n<body><table>"
+    "<tr><th>Grade</th><th>C %</th></tr><tr><td>SS400</td><td>0.17</td></tr>"
+    "</table></body></html>\n"
+)
+_XML = (
+    '<?xml version="1.0" encoding="UTF-16"?>\n<factbook>'
+    "<country><name>Iceland</name><capital>Reykjav\xedk</capital></country>"
+    "</factbook>\n"
+)
+_CSV = "Team,Location,Stanley Cups\nBlues,STL,1\nFlyers,PHI,2\nMaple Leafs,TOR,13\n"
+_MD = "# Umlauts\n\nDas k\xf6nnen wir sch\xf6n machen, sagte der B\xe4r.\n"
+
+# the reference's file names, so each case keeps its test id
+DOCS = {
+    "fake-text-utf-16.txt": _TEXT.encode("utf-16"),
+    "fake-text-utf-16-le.txt": ("\ufeff" + _TEXT).encode("utf-16-le"),
+    "fake-text-utf-16-be.txt": ("\ufeff" + _TEXT).encode("utf-16-be"),
+    "fake-text-utf-32.txt": _TEXT.encode("utf-32"),
+    "example-steelJIS-datasheet-utf-16.html": _HTML.encode("utf-16"),
+    "factbook-utf-16.xml": _XML.encode("utf-16"),
+    "stanley-cups-utf-16.csv": _CSV.encode("utf-16"),
+    "umlauts-non-utf8.md": _MD.encode("latin-1"),
+}
 
 
 def _read(name: str) -> bytes:
-    return (DOCS / name).read_bytes()
+    return DOCS[name]
 
 
 @pytest.mark.parametrize(

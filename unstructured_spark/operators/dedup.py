@@ -645,86 +645,83 @@ def connected_components(
     max_iterations: int = 20,
 ) -> DataFrame:
     """Duplicate-cluster formation: connected components over candidate
-    pairs via iterative min-label propagation (the standard large-graph
-    CC algorithm — alternating small-star/large-star simplified to
-    symmetric min-exchange, converging in O(log n) rounds for the
-    near-dup graphs LSH produces).
+    pairs via iterative min-label propagation with Shiloach-Vishkin
+    hooking and pointer jumping. Each round, for every edge (a, b), the
+    node that ``a`` is labelled with takes ``b``'s label (whole label
+    trees merge, not single nodes), and every node takes its label's
+    label. Rounds grow with the log of the component diameter: a
+    shuffled 4k-node path settles in ~17 rounds, where propagating
+    labels one hop at a time needs hundreds.
 
-    Returns (doc, cluster_id) for every node that appears in a pair;
-    cluster_id is the minimum doc id reachable. Each round is one
-    shuffle; iteration stops early when labels reach a fixpoint
-    (checked with a cheap aggregate, not a collect of the data).
+    Returns (doc, label) for every node that appears in a pair; label
+    is the minimum doc id of the node's component. Each round has one
+    action: the fixpoint check, a cheap aggregate (not a collect of the
+    data) that also materializes the round's lazy checkpoint. The
+    initial labels carry a signature too, so a graph whose first labels
+    are already final (cliques, e.g. an exact/near-dup triple) stops
+    after one round. Raises ``RuntimeError`` if the labels are still
+    changing after ``max_iterations`` rounds.
+
+    No partition count is fixed: the exchanges take
+    ``spark.sql.shuffle.partitions`` as the ceiling and AQE coalesces
+    them by its advisory size, so a thin LSH graph runs few tasks and a
+    corpus-scale one many, with no sizing job over the edges.
     """
-    persisted = (
+    edges = (
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
         .persist()
     )
-    # right-size the iteration's shuffles to the graph, not the input:
-    # LSH candidate graphs are tiny relative to the corpus, and each
-    # round is several shuffles whose task overhead dominates when the
-    # data is thin. ~50k edges per partition keeps rounds single-digit
-    # tasks at bench scale and thousands of tasks at 100 TB scale.
-    n_edges = persisted.count()
-    parts = int(max(1, min(n_edges // 50_000 + 1, 2048)))
-    edges = persisted.repartition(parts, "b")
-    # initial label: min neighbor vs self
-    labels = (
-        edges.repartition(parts, "a")
-        .groupBy("a")
-        .agg(F.least(F.min("b"), F.first("a")).alias("label"))
-        .select(F.col("a").alias("doc"), "label")
-        .localCheckpoint(eager=True)
-    )
-    prev_sig: int | None = None
-    for _ in range(max_iterations):
-        # one-hop: my new label = min(my label, neighbors' labels)
-        neighbor_labels = (
-            edges.join(labels, edges.b == labels.doc, "inner")
-            .select(F.col("a").alias("doc"), F.col("label"))
-        )
-        # pointer doubling candidates: my label's own label — halves the
-        # remaining path each round, so long chains converge in
-        # O(log diameter) rounds instead of O(diameter)
-        jump = labels.select(
-            F.col("doc").alias("jdoc"), F.col("label").alias("jlabel")
-        )
-        label_of_label = (
-            labels.join(jump, labels.label == jump.jdoc, "inner")
-            .select("doc", F.col("jlabel").alias("label"))
-        )
-        # one aggregation folds self + neighbor + doubled candidates.
-        # localCheckpoint truncates lineage — the self-join would
-        # otherwise double the logical plan every round (exponential
-        # planning cost, the classic iterative-algorithm trap). LAZY:
-        # the convergence aggregate right below is the round's first
-        # action, so it materializes + stores the checkpoint blocks in
-        # the same job — one job per round instead of an eager
-        # materialization job followed by the signature job.
-        new_labels = (
-            labels.select("doc", "label")
-            .union(neighbor_labels)
-            .union(label_of_label)
-            .repartition(parts, "doc")  # groupBy reuses this exchange
-            .groupBy("doc")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        # convergence: labels are monotonically non-increasing, so the
-        # assignment is a fixpoint iff the label set is unchanged — one
-        # cheap aggregate instead of a join (bit_xor: order-independent,
-        # overflow-free under ANSI mode). Doubles as the lazy
-        # checkpoint's materializing action.
-        sig = new_labels.agg(
+
+    def signature(frame: DataFrame) -> int:
+        # labels are monotonically non-increasing, so the assignment is
+        # a fixpoint iff the label set is unchanged (bit_xor:
+        # order-independent, overflow-free under ANSI mode)
+        return frame.agg(
             F.expr("bit_xor(xxhash64(doc, label))").alias("s")
         ).collect()[0]["s"]
-        labels = new_labels
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    persisted.unpersist()
-    return labels
+
+    # initial label: min neighbor vs self
+    labels = (
+        edges.groupBy("a")
+        .agg(F.least(F.min("b"), F.first("a")).alias("label"))
+        .select(F.col("a").alias("doc"), "label")
+        .localCheckpoint(eager=False)
+    )
+    prev_sig = signature(labels)
+    try:
+        for _ in range(max_iterations):
+            hooks = (
+                edges.join(labels.toDF("a", "la"), "a")
+                .join(labels.toDF("b", "lb"), "b")
+                .select(F.col("la").alias("doc"), F.col("lb").alias("label"))
+            )
+            jumps = labels.join(labels.toDF("label", "jlabel"), "label").select(
+                "doc", F.col("jlabel").alias("label")
+            )
+            # localCheckpoint truncates lineage — the self-joins would
+            # otherwise double the logical plan every round (exponential
+            # planning cost, the classic iterative-algorithm trap). LAZY:
+            # the signature is the round's first action, so it
+            # materializes + stores the checkpoint blocks in the same job.
+            labels = (
+                labels.union(hooks)
+                .union(jumps)
+                .groupBy("doc")
+                .agg(F.min("label").alias("label"))
+                .localCheckpoint(eager=False)
+            )
+            sig = signature(labels)
+            if sig == prev_sig:
+                return labels
+            prev_sig = sig
+    finally:
+        edges.unpersist()
+    raise RuntimeError(
+        f"connected_components: labels still changing after "
+        f"{max_iterations} rounds; pass a larger max_iterations"
+    )
 
 
 def duplicate_clusters(
@@ -796,13 +793,12 @@ def drop_near_duplicates(
     groupBy + join-back shuffles the same keys twice. Steps 1-3 are
     the oracle-checked operators above, composed.
 
-    The input is read twice: once into a local checkpoint of the narrow
-    projection ``(doc_id, text[, quality_col])``, from which every
-    drop-set branch is built (fingerprints, pairs, the quality window),
-    and once by the output probe. An upstream chain (parse, extract,
-    redact) therefore runs twice per document, not once per branch.
-    The checkpoint holds the corpus text in executor storage until the
-    returned frame is released.
+    The input is read once, into a local checkpoint of the whole frame:
+    every drop-set branch (fingerprints, pairs, the quality window) is
+    built from a projection of it, and the output probe anti-joins it.
+    An upstream chain (parse, extract, redact) therefore runs once per
+    document. The checkpoint holds every input column in executor
+    storage until the returned frame is released.
     """
     if keep not in ("min_id", "best"):
         raise ValueError(f"keep must be 'min_id' or 'best', got {keep!r}")
@@ -826,7 +822,8 @@ def drop_near_duplicates(
     # to double, yield null, and pick an arbitrary survivor.
 
     q_cols = [quality_col] if keep == "best" else []
-    narrow = df.select(doc_id, text, *q_cols).localCheckpoint(eager=True)
+    checkpoint = df.localCheckpoint(eager=True)
+    narrow = checkpoint.select(doc_id, text, *q_cols)
     # exact groups: every doc whose group representative is another doc
     fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))))
     if keep == "min_id":
@@ -902,7 +899,7 @@ def drop_near_duplicates(
         drops = drops.withColumnRenamed("doc", doc_id)
         if broadcast_drops:
             drops = F.broadcast(drops)
-        return df.join(drops, doc_id, "left_anti")
+        return checkpoint.join(drops, doc_id, "left_anti")
     finally:
         pairs.unpersist()
 
@@ -1348,13 +1345,6 @@ def dedup_against_index(
         hits, new_docs[doc_id] == F.col("_hit"), "left_anti"
     )
     if intra_batch:
-        # drop_near_duplicates references its input ~4 times (exact
-        # fingerprint path, n-gram pairs, final anti-join); without a
-        # lineage cut each reference replays the whole vs-history
-        # pipeline (both minhash passes + the bucket join). The batch's
-        # survivors are day-sized, not corpus-sized — checkpointing
-        # them is the production shape too.
-        survivors = survivors.localCheckpoint(eager=False)
         survivors = drop_near_duplicates(
             survivors, text=text, doc_id=doc_id, n=shingle_size,
             threshold=threshold, num_hashes=num_hashes, bands=bands,
