@@ -3309,9 +3309,8 @@ def q_warc_ingest_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gzip WARC round trip (new in r12): same record synthesis as
     q_warc_ingest, but each record becomes its own gzip MEMBER — the
     Common Crawl .warc.gz layout — before the archives hit the
-    distributed parser. This puts the member decoder
-    (sources/warc.py _iter_gzip_members, where both r11 quadratics
-    lived) behind a DuckDB hash oracle, not just unit tests: the
+    distributed parser. This puts the member decoder (sources/warc.py
+    _iter_gzip_members_stream, where both r11 quadratics lived) behind a DuckDB hash oracle, not just unit tests: the
     oracle replays the round trip as the identity over documents, so
     any member-boundary or framing defect after decompression breaks
     the hash. Scale shape: one groupBy pack + one map-only

@@ -35,6 +35,26 @@ class TestClassify:
     def test_address(self):
         assert classify.element_type_from_text("Austin, TX 78701") == "Address"
 
+    TYPE_CASES = [
+        ("• A bullet", "ListItem"),
+        ("Introduction", "Title"),
+        ("user@example.com", "EmailAddress"),
+        ("Austin, TX 78701", "Address"),
+        ("1. First item", "ListItem"),
+        (
+            "This is a story that was told. It has lots of sentences inside it.",
+            "NarrativeText",
+        ),
+        ("$5,000.00", "Text"),
+        ("THIS IS ALL CAPS TEXT THAT GOES ON", "Title"),
+        ("word salad spark table join filter", "Title"),
+        ("Ends with a comma,", "Text"),
+    ]
+
+    def test_type_case_table(self):
+        for text, expected in self.TYPE_CASES:
+            assert classify.element_type_from_text(text) == expected, text
+
     def test_env_var_overrides_match_reference(self, monkeypatch):
         # reference text_type.py:53-82,117-137: env vars take
         # precedence over kwargs, read per call
@@ -121,13 +141,8 @@ class TestClassify:
     def test_contains_english_word(self):
         assert classify.contains_english_word("the quick fox")
 
-    def test_contains_english_word_reference_cases(self, spark):
-        # the reference's own case table (test_text_type.py:196-215),
-        # run against BOTH the Python mirror and the column form
-        from pyspark.sql import functions as F
-
-        from unstructured_spark.functions import text_type
-
+    def test_contains_english_word_reference_cases(self):
+        # the reference's own case table (test_text_type.py:196-215)
         cases = [
             ("PARROT BEAK", True),
             ("Parrot Beak", True),
@@ -143,24 +158,14 @@ class TestClassify:
             ("Unstructured Technologies", True),
             ("1.A.RISKS", True),
             ("Big/Brown/Sheep", True),
-            # Unicode whitespace separators: Java \s is ASCII-only, so
-            # the column form spells the Unicode block out explicitly
-            # (r9 advisory) — both paths must split NBSP/EN-space/
-            # ideographic-space identically
+            # Unicode whitespace separators: NBSP, EN space and
+            # ideographic space split words like ASCII whitespace
             ("zxqv\u00a0parrot", True),
             ("zxqv\u2003beak\u3000zxqv", True),
             ("zxqv\u00a0zxqv", False),
         ]
         for text, expected in cases:
             assert classify.contains_english_word(text) is expected, text
-        df = spark.createDataFrame([(t,) for t, _ in cases], "t string")
-        got = [
-            r["e"]
-            for r in df.select(
-                text_type.contains_english_word(F.col("t")).alias("e")
-            ).collect()
-        ]
-        assert got == [e for _, e in cases]
         assert classify.contains_english_word("'beggars' said it IS so")
         assert not classify.contains_english_word("zxqv wvzk pfft")
         assert not classify.contains_english_word("a b c")  # len>1 required
@@ -463,15 +468,11 @@ class TestExtraExtractors:
         assert r["h"] == ["ab-1.example.com"]
         assert r["m"] == ["1.2.3.4"]  # trailing ';' stripped
 
-    def test_contains_english_word(self, spark):
-        from pyspark.sql import functions as F
-
-        from unstructured_spark.functions.text_type import contains_english_word
-
-        df = spark.createDataFrame(
-            [("The quick result",), ("zzz qqq urwx",), ("",)], "text string"
-        )
-        vals = [r[0] for r in df.select(contains_english_word(F.col("text"))).collect()]
+    def test_contains_english_word(self):
+        vals = [
+            classify.contains_english_word(t)
+            for t in ("The quick result", "zzz qqq urwx", "")
+        ]
         assert vals == [True, False, False]
 
 

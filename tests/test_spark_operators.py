@@ -1,21 +1,19 @@
-"""End-to-end Spark operator tests: partition pipeline, native
-partition_text, cleaners/classifier parity, serde round-trip."""
+"""End-to-end Spark operator tests: partition pipeline, cleaners,
+serde round-trip."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from tests import fixtures
-from unstructured_spark.functions import cleaners, text_type
+from unstructured_spark.functions import cleaners
 from unstructured_spark.operators.partition_auto import partition_documents
-from unstructured_spark.operators.partition_text import partition_text
 from unstructured_spark.operators.serde import (
     elements_to_markdown,
     filter_element_types,
     read_elements_json,
     write_elements_json,
 )
-from unstructured_spark.parsers import classify
 
 
 @pytest.fixture(scope="module")
@@ -86,51 +84,23 @@ class TestPartitionDocuments:
         body = next(r for r in html_els if "bold statement" in r["text"])
         assert body["parent_id"] == h1["element_id"]
 
-
-class TestNativePartitionText:
-    def test_matches_python_parser_types(self, spark):
+    def test_text_column_via_encode(self, spark):
+        # a DataFrame of text reaches the one text rule as utf-8 bytes
         df = spark.createDataFrame(
-            [("d1", fixtures.FAKE_TEXT)], "doc_id string, text string"
+            [("d1", "• first bullet\n• second bullet")], "doc_id string, text string"
         )
         out = (
-            partition_text(df, apply_metadata=False)
+            partition_documents(
+                df.select("doc_id", F.encode("text", "utf-8").alias("content"))
+            )
             .orderBy("element_index")
             .select("type", "text")
             .collect()
         )
-        # the native CASE WHEN classifier and the Python mirror agree
-        for row in out:
-            assert classify.element_type_from_text(row["text"]) == row["type"]
-
-
-class TestClassifierParity:
-    CASES = [
-        "• A bullet",
-        "Introduction",
-        "user@example.com",
-        "Austin, TX 78701",
-        "1. First item",
-        "This is a story that was told. It has lots of sentences inside it.",
-        "$5,000.00",
-        "THIS IS ALL CAPS TEXT THAT GOES ON",
-        "word salad spark table join filter",
-        "Ends with a comma,",
-    ]
-
-    def test_spark_vs_python(self, spark):
-        # lockstep claim is lexicon-vs-lexicon; the spacy-exact POS path
-        # is an explicit registration (classify.enable_spacy_pos), never
-        # auto-probed, so the default Python mirror always matches the
-        # JVM-side heuristic
-        assert classify._POS_TAGGER is None
-        df = spark.createDataFrame([(t,) for t in self.CASES], "text string")
-        out = df.select(
-            "text", text_type.element_type_from_text(F.col("text")).alias("t")
-        ).collect()
-        for row in out:
-            assert (
-                classify.element_type_from_text(row["text"]) == row["t"]
-            ), row["text"]
+        assert [(r["type"], r["text"]) for r in out] == [
+            ("ListItem", "first bullet"),
+            ("ListItem", "second bullet"),
+        ]
 
 
 class TestCleaners:

@@ -1,9 +1,6 @@
-"""RST / Org structural parsers and the batched standalone hierarchy
-operator."""
+"""RST / Org structural parsers and the per-document hierarchy fold."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from unstructured_spark.parsers.structured_text import (
     org_to_elements,
@@ -82,27 +79,17 @@ class TestOrg:
         assert any(e["type"] == "CodeSnippet" for e in els)
 
 
-class TestBatchedHierarchyOperator:
-    def test_standalone_dataframe_form(self, spark):
-        from unstructured_spark.operators.metadata import set_element_hierarchy
+class TestFinalizeHierarchy:
+    def test_title_adopts_following_elements(self):
+        from unstructured_spark.operators.metadata import py_finalize_doc
 
-        rows = []
         for d in ("d1", "d2"):
-            rows += [
-                (d, 0, f"{d}-t", "Title", "Heading", 0),
-                (d, 1, f"{d}-n", "NarrativeText", "Body text", None),
-                (d, 2, f"{d}-l", "ListItem", "item", 0),
+            rows = [
+                {"type": "Title", "text": "Heading", "category_depth": 0},
+                {"type": "NarrativeText", "text": "Body text", "category_depth": None},
+                {"type": "ListItem", "text": "item", "category_depth": 0},
             ]
-        df = spark.createDataFrame(
-            rows,
-            "doc_id string, element_index long, element_id string, "
-            "type string, text string, category_depth int",
-        )
-        out = {
-            (r["doc_id"], r["element_id"]): r["parent_id"]
-            for r in set_element_hierarchy(df).collect()
-        }
-        for d in ("d1", "d2"):
-            assert out[(d, f"{d}-n")] == f"{d}-t"
-            assert out[(d, f"{d}-l")] == f"{d}-t"
-            assert out[(d, f"{d}-t")] is None
+            title, body, item = py_finalize_doc(rows, doc_id=d)
+            assert title["parent_id"] is None
+            assert body["parent_id"] == title["element_id"]
+            assert item["parent_id"] == title["element_id"]

@@ -7,7 +7,7 @@ pandas UDFs only where per-document sequential semantics demand it.
 
 Layout:
   schema      — canonical element DataFrame schema (SURVEY §1.5)
-  functions   — scalar column function library (cleaners, classifiers, extract)
+  functions   — scalar column function library (cleaners, extract, patterns)
   operators   — partitioners, chunking, metadata enrichment, dedup, similarity
   sources     — document ingest (binaryFile batch + streaming)
   streaming   — structured-streaming pipelines

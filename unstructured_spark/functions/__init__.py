@@ -1,7 +1,10 @@
-"""Scalar column-function library (the engine's WHERE/CASE/cleaner surface).
+"""Scalar column-function library (the engine's WHERE/cleaner/extract
+surface) plus the shared regex and word-list data.
 
-Everything here returns pyspark Column expressions built from JVM-side
-built-ins so the classifier/cleaner path stays inside whole-stage
-codegen — no Python in the hot loop (reference implements these as
-row-at-a-time Python string functions; SURVEY §2.2/§2.3).
+The column functions return pyspark Column expressions built from
+JVM-side built-ins, so cleaners and extractors stay inside whole-stage
+codegen (reference implements these as row-at-a-time Python string
+functions; SURVEY §2.3). Element classification has one rule, in
+``parsers/classify.py``; it imports ``patterns`` and ``english_words``
+from here.
 """

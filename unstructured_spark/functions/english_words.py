@@ -15,9 +15,8 @@ text made exclusively of words outside the top ~2k), which the
 check's callers (narrative/title heuristics over prose) make
 practically unreachable.
 
-Kept as a plain Python tuple → frozenset so the Python predicates get
-an O(1) membership test and the column mirror compiles to a Catalyst
-``InSet`` hash probe (``functions/text_type.py``).
+Kept as a plain Python tuple → frozenset so ``parsers/classify.py``
+gets an O(1) membership test.
 """
 
 from __future__ import annotations

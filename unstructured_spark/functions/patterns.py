@@ -57,8 +57,6 @@ US_CITY_STATE_ZIP = (
     r"T[NX]|UT|V[AIT]|W[AIVY])[,\s]+\d{5}(-\d{4})?"
 )
 
-PARAGRAPH_SPLIT = r"\n\s*\n"  # blank-line paragraph boundary (partition/text.py)
-
 IP_ADDRESS = r"\b(?:\d{1,3}\.){3}\d{1,3}\b"
 
 IMAGE_URL = r"https?://[^\s]+?\.(?:png|jpg|jpeg|gif|bmp|webp|tiff?)"

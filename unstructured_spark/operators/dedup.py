@@ -750,7 +750,6 @@ def drop_near_duplicates(
     bands: int = 8,
     keep: str = "min_id",
     quality_col: str | None = None,
-    broadcast_drops: bool = True,
 ) -> DataFrame:
     """One-call corpus dedup — the full pipeline a training-data run
     applies, returning the corpus with non-canonical duplicates REMOVED:
@@ -778,18 +777,14 @@ def drop_near_duplicates(
       don't, so an exact group of CASE-variants can straddle clusters
       — each path then keeps its own representative independently.
 
-    Scale shape: with ``broadcast_drops=True`` (default) the member set
-    and the final drop set are broadcast — the corpus is probed, never
-    shuffled. That assumes duplicates are a SMALL fraction of the
-    corpus (the usual case; FineWeb-class web dumps dedup away ~10-30%
-    of docs but the *member id+quality* rows are a few bytes each).
-    On a pathologically duplicated corpus where even the id set
-    overflows the broadcast ceiling, pass ``broadcast_drops=False``:
-    plain joins let the planner/AQE pick shuffle strategies that
-    degrade gracefully instead of OOMing the driver. The ``'best'``
-    keeper picks ride ONE window per grouping (exact groups on the
-    fingerprint partitioning, clusters on the label partitioning) —
-    min over ``struct(-quality, doc)`` = quality desc, doc asc — so no
+    Scale shape: the member set and the final drop set are broadcast —
+    the corpus is probed, never shuffled. That assumes duplicates are a
+    SMALL fraction of the corpus (the usual case; FineWeb-class web
+    dumps dedup away ~10-30% of docs but the *member id+quality* rows
+    are a few bytes each). The ``'best'`` keeper picks ride ONE window
+    per grouping (exact groups on the fingerprint partitioning,
+    clusters on the label partitioning) — min over
+    ``struct(-quality, doc)`` = quality desc, doc asc — so no
     groupBy + join-back shuffles the same keys twice. Steps 1-3 are
     the oracle-checked operators above, composed.
 
@@ -878,10 +873,9 @@ def drop_near_duplicates(
             # broadcast it into the quality projection so the corpus is
             # probed, never shuffled; then one label-window picks the
             # keeper (no groupBy + join-back pass over the same keys)
-            msmall = F.broadcast(members) if broadcast_drops else members
             mq = narrow.select(
                 F.col(doc_id).alias("doc"), F.col(quality_col).alias("_q")
-            ).join(msmall, "doc")
+            ).join(F.broadcast(members), "doc")
             wl = Window.partitionBy("label")
             near_drop = (
                 mq.withColumn(
@@ -896,9 +890,7 @@ def drop_near_duplicates(
                 .select("doc")
             )
         drops = exact_drop.union(near_drop).distinct()
-        drops = drops.withColumnRenamed("doc", doc_id)
-        if broadcast_drops:
-            drops = F.broadcast(drops)
+        drops = F.broadcast(drops.withColumnRenamed("doc", doc_id))
         return checkpoint.join(drops, doc_id, "left_anti")
     finally:
         pairs.unpersist()

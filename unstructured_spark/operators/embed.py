@@ -333,19 +333,6 @@ def embed_elements(
     return df.select(*in_cols).mapInPandas(run, schema=out_schema)
 
 
-def embed_query_column(
-    queries: DataFrame,
-    encoder_factory: Callable[[], EmbeddingEncoder] = HashingEncoder,
-    *,
-    text_col: str = "query",
-    out_col: str = "embedding",
-) -> DataFrame:
-    """Embed a (small) query table — same plumbing, convenience wrapper."""
-    return embed_elements(
-        queries, encoder_factory, text_col=text_col, out_col=out_col
-    )
-
-
 def cosine_sim_expr(a, b):
     """JVM-side cosine over two array<float/double> columns
     (zip_with + aggregate; no UDF)."""

@@ -2,28 +2,20 @@
 
 The reference wraps every partitioner with ``@apply_metadata`` which, in
 order: detects languages, stamps provenance, assigns deterministic hash
-ids, and assigns hierarchy (metadata.py:155-281). Here each pass is a
-DataFrame transformation:
+ids, and assigns hierarchy (metadata.py:155-281). Here that pass is ONE
+pure function over a document's ordered element rows,
+:func:`py_finalize_doc`, run inside the partition UDF
+(operators/partition_auto.py): a document is fully contained in one
+input row, so ids, doc-level language and hierarchy cost no shuffle.
 
-- hash ids      → ``row_number`` window + ``sha2`` (native, codegen)
-- parent remap  → broadcast self-join old-id → new-id
-- hierarchy     → per-doc stack fold in ``applyInPandas`` (sequential
-                  semantics; cannot be a window function)
-- languages     → doc-level n-gram heuristic (native) joined back
-
-At 100 TB scale the windows partition by ``doc_id`` (and page), so the
-shuffle is one exchange keyed by doc — the same exchange chunking needs,
-and Spark reuses it when the operators are adjacent in the plan.
+:func:`detect_language_expr` is the column form of the language rule,
+for filtering element tables by language (pipelines.py).
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from unstructured_spark.schema import ELEMENT_COLUMNS
 
@@ -53,115 +45,6 @@ def widen_to_element_schema(df: DataFrame) -> DataFrame:
         for c in ELEMENT_COLUMNS
     ]
     return df.select(*cols)
-
-
-def assign_hash_ids(df: DataFrame) -> DataFrame:
-    """Deterministic element ids: sha256 of
-    filename + text + page_number + sequence-on-page, truncated to 32 hex
-    chars (reference elements.py:789-808, metadata.py:284-311).
-
-    Sequence-on-page is a ``row_number`` window per (doc, page) — stable
-    under page-parallel processing by construction.
-    """
-    w = Window.partitionBy(
-        "doc_id", F.coalesce(F.col("page_number"), F.lit(-1))
-    ).orderBy("element_index")
-    seq = F.row_number().over(w) - 1
-    fname = F.coalesce(
-        *( [F.col("filename")] if "filename" in df.columns else [] ),
-        F.col("doc_id"),
-    )
-    return df.withColumn(
-        "element_id",
-        F.substring(
-            F.sha2(
-                F.concat_ws(
-                    "",
-                    fname,
-                    F.col("text"),
-                    F.coalesce(F.col("page_number").cast("string"), F.lit("")),
-                    seq.cast("string"),
-                ),
-                256,
-            ),
-            1,
-            32,
-        ),
-    )
-
-
-def _hierarchy_fold(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Stack-based parent assignment over one document in element order
-    (reference metadata.py:99-147). Sequential by nature → grouped UDF.
-    """
-    pdf = pdf.sort_values("element_index").reset_index(drop=True)
-    stack: list[tuple[str, int, str]] = []  # (category, depth, element_id)
-    parents: list[str | None] = []
-    for row in pdf.itertuples(index=False):
-        etype = row.type if isinstance(row.type, str) and row.type else "Text"
-        pre_assigned = getattr(row, "parent_id", None)
-        if pre_assigned is not None and not pd.isna(pre_assigned):
-            parents.append(pre_assigned)
-            continue
-        depth = row.category_depth
-        depth = int(depth) if pd.notna(depth) else 0
-        parent: str | None = None
-        # walk down the stack of preceding elements until one qualifies as
-        # a parent: same category at strictly shallower depth, or a
-        # different category whose ruleset admits this one
-        while stack:
-            top_cat, top_depth, top_id = stack[-1]
-            if (top_cat == etype and top_depth < depth) or (
-                top_cat != etype and etype in _HIERARCHY_RULESET.get(top_cat, ())
-            ):
-                parent = top_id
-                break
-            stack.pop()
-        parents.append(parent)
-        stack.append((etype, depth, row.element_id))
-    pdf["parent_id"] = pd.array(parents, dtype="object")
-    return pdf
-
-
-def set_element_hierarchy(df: DataFrame) -> DataFrame:
-    """Assign ``parent_id`` per document (sequential stack fold).
-
-    Physical shape mirrors the batched chunker: cluster by doc, sort
-    within partitions, fold whole batches — per-batch (not per-doc)
-    pandas overhead, with a carry buffer for documents straddling
-    Arrow batch boundaries.
-    """
-    schema = df.schema
-    if "parent_id" not in df.columns:
-        df = df.withColumn("parent_id", F.lit(None).cast("string"))
-        schema = df.schema
-
-    def fold_batches(batches):
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            last_doc = pdf["doc_id"].iloc[-1]
-            head = pdf[pdf["doc_id"] != last_doc]
-            carry = pdf[pdf["doc_id"] == last_doc]
-            if not head.empty:
-                yield pd.concat(
-                    [_hierarchy_fold(g) for _, g in head.groupby("doc_id", sort=False)],
-                    ignore_index=True,
-                )
-        if carry is not None and not carry.empty:
-            yield pd.concat(
-                [_hierarchy_fold(g) for _, g in carry.groupby("doc_id", sort=False)],
-                ignore_index=True,
-            )
-
-    clustered = df.repartition("doc_id").sortWithinPartitions(
-        "doc_id", "element_index"
-    )
-    return clustered.mapInPandas(fold_batches, schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -195,39 +78,6 @@ def detect_language_expr(text_col):
     return F.when(F.size(toks) < 5, F.lit("eng")).otherwise(best["lang"])
 
 
-def apply_lang_metadata(df: DataFrame, per_element: bool = False) -> DataFrame:
-    """Doc-level language detection: aggregate the doc text, detect once,
-    broadcast-join back (SURVEY §2.5). Per-element mode scores each row.
-    """
-    if per_element:
-        return df.withColumn("languages", F.array(detect_language_expr(F.col("text"))))
-    doc_lang = (
-        df.groupBy("doc_id")
-        .agg(F.concat_ws(" ", F.collect_list("text")).alias("_doc_text"))
-        .select("doc_id", F.array(detect_language_expr(F.col("_doc_text"))).alias("_langs"))
-    )
-    joined = df.join(F.broadcast(doc_lang), "doc_id", "left")
-    # fill only missing values — the in-UDF twin (py_finalize_doc)
-    # preserves caller-provided languages, so the DataFrame form must too
-    langs = (
-        F.coalesce(F.col("languages"), F.col("_langs"))
-        if "languages" in df.columns
-        else F.col("_langs")
-    )
-    return joined.withColumn("languages", langs).drop("_langs")
-
-
-# ---------------------------------------------------------------------------
-# Pure-Python per-document finalization — used INSIDE the partition UDF
-# (operators/partition_auto.py). A document is fully contained in one
-# input row, so ids, hierarchy, and doc-level language are pure
-# functions of that row's parse output: computing them in the same pass
-# costs zero shuffles, where the DataFrame forms below each cost one.
-# The DataFrame forms remain the right tool for element tables read
-# back from storage.
-# ---------------------------------------------------------------------------
-
-
 def py_detect_language(text: str) -> str:
     """Python mirror of :func:`detect_language_expr` (same markers, same
     argmax tie-break on (score, lang))."""
@@ -245,7 +95,19 @@ def py_finalize_doc(
     rows: list[dict], *, doc_id: str, filename: str | None = None
 ) -> list[dict]:
     """Hash ids + doc language + hierarchy for one document's ordered
-    element rows, matching the DataFrame operators bit-for-bit."""
+    element rows — the one ``apply_metadata`` rule (reference
+    metadata.py:196-277 order), applied in place.
+
+    - ``element_id``: sha256 of filename (else ``doc_id``) + text +
+      page_number + sequence-on-page, truncated to 32 hex chars
+      (reference elements.py:789-808, metadata.py:284-311);
+    - ``languages``: the doc-level :func:`py_detect_language` over the
+      joined text, filled only where the parser left none;
+    - ``parent_id``: a stack fold in element order (reference
+      metadata.py:99-147): the nearest preceding element of the same
+      category at a strictly shallower depth, or of a different
+      category whose ruleset admits this one. A parser-assigned
+      parent is kept."""
     import hashlib
 
     lang = py_detect_language(" ".join(r.get("text") or "" for r in rows))
@@ -263,7 +125,6 @@ def py_finalize_doc(
         r["element_id"] = hashlib.sha256(basis.encode("utf-8")).hexdigest()[:32]
         if not r.get("languages"):
             r["languages"] = [lang]
-    # stack fold (same semantics as _hierarchy_fold)
     stack: list[tuple[str, int, str]] = []
     for r in rows:
         if r.get("parent_id") is not None:
@@ -283,22 +144,3 @@ def py_finalize_doc(
         r["parent_id"] = parent
         stack.append((etype, depth, r["element_id"]))
     return rows
-
-
-def finalize_elements(
-    df: DataFrame,
-    *,
-    languages: bool = True,
-    hierarchy: bool = True,
-) -> DataFrame:
-    """The full ``apply_metadata`` pass: langs → hash ids → hierarchy →
-    widen to canonical schema (reference metadata.py:196-277 order).
-    """
-    out = df
-    if languages:
-        out = apply_lang_metadata(out)
-    out = assign_hash_ids(out)
-    out = widen_to_element_schema(out)
-    if hierarchy:
-        out = set_element_hierarchy(out)
-    return out

@@ -81,9 +81,7 @@ def partition_documents(
     Metadata finalization (hash ids, doc language, hierarchy) happens
     INSIDE the parse UDF (``document_rows``): a document is fully
     contained in one input row, so these are per-row pure functions —
-    zero shuffles for the whole partition+metadata pipeline (the
-    separate DataFrame operators in ``operators.metadata`` each cost an
-    exchange and exist for element tables read back from storage).
+    zero shuffles for the whole partition+metadata pipeline.
 
     Extra ``parser_kwargs`` flow through ``partition_bytes`` to the
     per-format partitioners (e.g. ``strategy=``, ``extract_forms=``,

@@ -1,9 +1,8 @@
-"""Python mirror of the JVM-side classifier predicates.
-
-Must stay in lockstep with ``functions/text_type.py`` (the native
-column expressions) — ``tests/test_classify_parity.py`` asserts both
-implementations agree on a fixture corpus. Semantics follow reference
-``partition/text_type.py``.
+"""Classifier predicates and the ``element_from_text`` decision tree —
+the one classification rule every partitioner runs (through
+``document_rows`` → ``py_finalize_doc``). Semantics follow reference
+``partition/text_type.py``; the partition-spine oracle
+(``q_partition_elements``) replays them in SQL.
 """
 
 from __future__ import annotations
@@ -111,8 +110,7 @@ assert all(chr(cp).isspace() for cp in _ISSPACE_DELETE)
 
 def under_non_alpha_ratio(text: str, threshold: float = 0.5) -> bool:
     """ACCEPT condition: alpha/non-space >= threshold (the reference's
-    under_non_alpha_ratio returns the REJECT side — kept in lockstep
-    with functions/text_type.py's column form).
+    under_non_alpha_ratio returns the REJECT side).
 
     Hot path (runs over the FULL text of every element): the non-space
     projection is a C-level translate and the alpha count a C-level
@@ -258,10 +256,7 @@ def _env_language_checks(language_checks: bool) -> bool:
 
     Cluster note: these predicates run inside partition UDFs on
     EXECUTORS, so the env var must be visible there — set it via
-    ``spark.executorEnv.UNSTRUCTURED_*`` on a real cluster (the
-    column mirrors in functions/text_type.py instead resolve env at
-    expression-build time on the driver). In local[] mode both paths
-    share one process and always agree."""
+    ``spark.executorEnv.UNSTRUCTURED_*`` on a real cluster."""
     v = _env_override("UNSTRUCTURED_LANGUAGE_CHECKS")
     return v if v is not None else language_checks
 
@@ -278,8 +273,7 @@ def contains_english_word(text: str) -> bool:
     """Any split token (lowercased, stripped to [a-z], len>1) found in
     the vendored common-English word list — the reference's language
     sanity check (text_type.py:190-205 over its nltk-derived list;
-    functions/english_words.py documents the coverage contract, and
-    the column form in functions/text_type.py uses the same set)."""
+    functions/english_words.py documents the coverage contract)."""
     lexicon = _english_lexicon()
     for word in re.split(r"[\s\-,.!?_\/]+", text.lower()):
         word = re.sub(r"[^a-z]", "", word)

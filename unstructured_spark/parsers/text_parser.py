@@ -1,6 +1,5 @@
-"""Plain-text → elements (Python mirror of the native partition_text
-operator, for use inside the auto-router UDF; reference
-``partition/text.py:42-166``)."""
+"""Plain-text → elements: the one text partitioner, run inside the
+auto-router UDF (reference ``partition/text.py:42-166``)."""
 
 from __future__ import annotations
 

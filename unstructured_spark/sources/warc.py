@@ -28,6 +28,7 @@ columns are pure functions of the record bytes.
 
 from __future__ import annotations
 
+import itertools
 import re
 import zlib
 from typing import Iterator
@@ -58,78 +59,37 @@ _MAX_HEADER_BYTES = 1 << 20
 _MAX_RECORD_BYTES = 1 << 30
 
 
-def _iter_gzip_members(data: bytes) -> Iterator[bytes]:
-    """Yield each gzip member of a concatenated stream (the Common
-    Crawl .warc.gz layout: one member per record) decompressed, ONE at
-    a time — the caller never holds the whole decompressed archive.
-    A corrupt member or trailing garbage ends the stream after the
-    bytes that decoded cleanly (torn archive loses the torn tail, not
-    the task)."""
-    # bounded-slice cursor, NOT `buf = d.unused_data` re-feeding: that
-    # form hands the decompressor the ENTIRE remaining archive per
-    # member and copies it back out as unused_data — O(members x
-    # archive bytes) in copies, hours on a 50k-member Common Crawl
-    # shard. Here every input byte is consumed exactly once.
-    mv = memoryview(data)
-    n = len(data)
-    pos = 0
-    step = 1 << 20
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        while True:
-            end = min(pos + step, n)
-            try:
-                chunk = d.decompress(mv[pos:end])
-            except zlib.error:
-                return  # corrupt member / non-gzip padding: stop cleanly
-            pos = end - len(d.unused_data)
-            if chunk:
-                yield chunk
-            if d.eof:
-                break
-            if end >= n:
-                return  # truncated final member: kept what decoded
-
-
 def _iter_gzip_members_stream(
     chunks: Iterator[bytes], *, step: int = 1 << 20
 ) -> Iterator[bytes]:
-    """Streaming twin of :func:`_iter_gzip_members`: decompress a
-    concatenated gzip-member stream arriving as raw CHUNKS (e.g.
-    file reads) instead of one in-memory blob. Same bounded-slice
-    cursor discipline — every compressed byte is fed at most
+    """Yield each gzip member of a concatenated stream (the Common
+    Crawl .warc.gz layout: one member per record) decompressed, from
+    raw CHUNKS (file reads, or slices of an in-memory blob). A
+    bounded-slice cursor: every compressed byte is fed at most
     ceil(step / member_size) extra times (the re-fed ``unused_data``
-    tail is capped at ``step``), never O(archive); resident set is one
-    raw chunk + one ``step`` window + the decompressor state."""
-    it = iter(chunks)
-    buf = bytearray()
-    pos = 0
-    exhausted = False
+    tail is capped at ``step``), never O(archive) — re-feeding the
+    whole remaining archive per member is quadratic on a 50k-member
+    Common Crawl shard. Resident set is one raw chunk + the
+    decompressor state. A corrupt member or trailing
+    garbage ends the stream after the bytes that decoded cleanly (a
+    torn archive loses the torn tail, not the task)."""
     d = zlib.decompressobj(wbits=31)
-    while True:
-        if pos >= len(buf):
-            if exhausted:
-                return  # clean end, or truncated final member
-            del buf[:pos]
-            pos = 0
+    for chunk in chunks:
+        # zlib keeps a member's state across calls, so each chunk is
+        # consumed in place: no buffer joins chunks
+        mv = memoryview(chunk)
+        pos = 0
+        while pos < len(mv):
+            end = min(pos + step, len(mv))
             try:
-                buf += next(it)
-            except StopIteration:
-                exhausted = True
-            continue
-        end = min(pos + step, len(buf))
-        mv = memoryview(buf)
-        try:
-            out = d.decompress(mv[pos:end])
-        except zlib.error:
-            return  # corrupt member / non-gzip padding: stop cleanly
-        finally:
-            mv.release()
-        pos = end - len(d.unused_data)
-        if out:
-            yield out
-        if d.eof:
-            d = zlib.decompressobj(wbits=31)
+                out = d.decompress(mv[pos:end])
+            except zlib.error:
+                return  # corrupt member / non-gzip padding: stop cleanly
+            pos = end - len(d.unused_data)
+            if out:
+                yield out
+            if d.eof:
+                d = zlib.decompressobj(wbits=31)
 
 
 def _iter_records_buffered(
@@ -225,26 +185,17 @@ def iter_warc_records(
     data: bytes, *, max_record_bytes: int = _MAX_RECORD_BYTES
 ) -> Iterator[dict]:
     """Yield ``{"headers": {lower-name: value}, "payload": bytes}`` per
-    WARC record in ``data``. Accepts plain or gzipped (multi-member)
-    input; gzip members decompress ONE at a time (constant memory
-    beyond the record being assembled). Garbage between records, a
-    corrupt Content-Length (> ``max_record_bytes``), and a
-    corrupt/truncated gzip tail lose the bad record, not the file."""
-    if data[:2] == _GZIP_MAGIC:
-        return _iter_records_buffered(
-            _iter_gzip_members(data), max_record_bytes=max_record_bytes
-        )
-    return _iter_records_buffered(
-        iter((data,)), max_record_bytes=max_record_bytes
+    WARC record in ``data``: the decoder of
+    :func:`iter_warc_records_stream`, fed 1 MiB views of the blob (no
+    chunk is copied out). Accepts plain or gzipped (multi-member)
+    input. Garbage between records, a corrupt Content-Length
+    (> ``max_record_bytes``), and a corrupt/truncated gzip tail lose
+    the bad record, not the file."""
+    mv = memoryview(data)
+    step = 1 << 20
+    return _iter_records(
+        (mv[i : i + step] for i in range(0, len(mv), step)), max_record_bytes
     )
-
-
-def _file_chunks(fh, chunk_bytes: int) -> Iterator[bytes]:
-    while True:
-        b = fh.read(chunk_bytes)
-        if not b:
-            return
-        yield b
 
 
 def iter_warc_records_stream(
@@ -253,21 +204,24 @@ def iter_warc_records_stream(
     chunk_bytes: int = 1 << 20,
     max_record_bytes: int = _MAX_RECORD_BYTES,
 ) -> Iterator[dict]:
-    """File-handle twin of :func:`iter_warc_records`: stream records
-    out of an OPEN binary file object without ever materializing the
-    archive bytes — the executor-side-open path that removes the
-    binaryFile 2 GB row cap entirely. Resident set: one raw chunk +
-    the record currently being assembled (+ one gzip window when the
-    archive is member-compressed). Accepts plain or .warc.gz input,
-    sniffed from the first two bytes."""
-    first = fh.read(chunk_bytes)
-    if not first:
-        return iter(())
-    import itertools
-
-    chunks: Iterator[bytes] = itertools.chain(
-        (first,), _file_chunks(fh, chunk_bytes)
+    """Stream records out of an OPEN binary file object without ever
+    materializing the archive bytes — the executor-side-open path that
+    removes the binaryFile 2 GB row cap entirely. Resident set: one
+    raw chunk + the record currently being assembled (+ one gzip window
+    when the archive is member-compressed). Accepts plain or .warc.gz
+    input."""
+    return _iter_records(
+        iter(lambda: fh.read(chunk_bytes), b""), max_record_bytes
     )
+
+
+def _iter_records(chunks: Iterator, max_record_bytes: int) -> Iterator[dict]:
+    """Records from raw archive chunks, plain or .warc.gz sniffed from
+    the first two bytes. Reads the first chunk at call time."""
+    first = next(chunks, None)
+    if first is None:
+        return iter(())
+    chunks = itertools.chain((first,), chunks)
     if first[:2] == _GZIP_MAGIC:
         chunks = _iter_gzip_members_stream(chunks)
     return _iter_records_buffered(chunks, max_record_bytes=max_record_bytes)
