@@ -323,3 +323,18 @@ class WordTokenizer:
     def tokenize(self, segment):
         n = max(1, -(-len(segment) // 4))
         return ["t"] * n if segment else []
+
+
+def widen_to_element_schema(df):
+    """Project a frame of some element columns to the full canonical
+    element schema, nulling the absent columns."""
+    from pyspark.sql import functions as F
+
+    from unstructured_spark.schema import ELEMENT_COLUMNS
+
+    return df.select(
+        *[
+            F.col(c) if c in df.columns else F.lit(None).alias(c)
+            for c in ELEMENT_COLUMNS
+        ]
+    )

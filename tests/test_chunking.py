@@ -178,7 +178,7 @@ class TestTableChunking:
 class TestSparkChunking:
     @pytest.fixture()
     def element_df(self, spark):
-        from unstructured_spark.operators.metadata import widen_to_element_schema
+        from tests.fixtures import widen_to_element_schema
 
         rows = _elements(
             ("Title", "Intro"),
@@ -630,7 +630,7 @@ class TestTableRoundTrip:
         from unstructured_spark.operators.html_table import (
             parse_html_table, table_text,
         )
-        from unstructured_spark.operators.metadata import widen_to_element_schema
+        from tests.fixtures import widen_to_element_schema
 
         html = "<table><thead><tr><th>col a</th><th>col b</th></tr></thead>" + "".join(
             f"<tr><td>val {i}a</td><td>val {i}b</td></tr>" for i in range(12)
@@ -658,7 +658,7 @@ class TestTableRoundTrip:
         from unstructured_spark.operators.chunking import (
             chunk_elements, reconstruct_table_from_chunks,
         )
-        from unstructured_spark.operators.metadata import widen_to_element_schema
+        from tests.fixtures import widen_to_element_schema
 
         html = "<table>" + "".join(
             f"<tr><td>item {i} text</td></tr>" for i in range(12)

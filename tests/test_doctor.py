@@ -71,6 +71,11 @@ class TestCli:
         rc, out, _ = self._run([])
         assert rc == 0
         assert "capability report" in out and "formats:" in out
+        # the report ends with the on-demand UDF profiler switch
+        assert out.rstrip("\n").splitlines()[-1].strip() == (
+            'spark.conf.set("spark.sql.pyspark.udf.profiler", "perf"), '
+            'run the job, then spark.profile.show(type="perf")'
+        )
 
     def test_for_ready_format(self):
         rc, out, _ = self._run(["--for", "pdf"])

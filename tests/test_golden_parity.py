@@ -152,7 +152,7 @@ def test_serde_wire_type_round_trip(spark):
     """'Text' serializes as 'UncategorizedText' and re-ingests back."""
     import pandas as pd
 
-    from unstructured_spark.operators.metadata import widen_to_element_schema
+    from tests.fixtures import widen_to_element_schema
     from unstructured_spark.operators.serde import elements_to_dicts_df
 
     rows = [dict(doc_id="d", element_id="e1", element_index=0, type="Text", text="plain")]

@@ -46,6 +46,28 @@ class TestTrainingDataPipeline:
         texts = [r["text"] for r in rows]
         assert len(texts) == len(set(texts))
 
+    def test_rows_equal_partition_chunk_embed(self, spark):
+        # the pipeline folds chunks inside the parse UDF; its rows must
+        # equal the exchange composition partition → chunk → embed in
+        # every column
+        from unstructured_spark.operators.chunking import chunk
+        from unstructured_spark.operators.embed import HashingEncoder, embed_elements
+        from unstructured_spark.operators.partition_auto import partition_documents
+        from unstructured_spark.pipelines import training_data_pipeline
+
+        kw = {"max_characters": 120, "overlap": 20}
+        docs = _docs(spark)
+        got = training_data_pipeline(
+            docs, chunk_kwargs=kw, quality_filter=False, near_dedup=False
+        )
+        want = embed_elements(
+            chunk(partition_documents(docs), strategy="by_title", **kw), HashingEncoder
+        )
+        assert got.columns == want.columns
+        got_rows = sorted(map(repr, got.collect()))
+        assert len(got_rows) > 3
+        assert got_rows == sorted(map(repr, want.collect()))
+
     def test_stages_optional(self, spark):
         from unstructured_spark.pipelines import training_data_pipeline
 

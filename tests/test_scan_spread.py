@@ -8,8 +8,13 @@ classifier._doc_buckets) must:
    input already parallelizes (the 100 TB case), and
 2. produce bit-identical results whether the input arrives as one
    split or many (the rebalance must not leak into any result).
+
+``partition_documents`` also sizes its parse tasks by input bytes: many
+small-file splits coalesce, with no shuffle, to two tasks per core, and
+a scan whose bytes need more tasks keeps its splits.
 """
 
+import contextlib
 import os
 import sys
 
@@ -19,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from unstructured_spark.operators import dedup  # noqa: E402
 from unstructured_spark.operators.classifier import nb_classify  # noqa: E402
+from unstructured_spark.schema import ELEMENT_COLUMNS  # noqa: E402
 
 
 def _docs(spark, n_parts):
@@ -99,3 +105,62 @@ def test_ngram_jaccard_results_identical_across_input_splits(spark):
     one = dedup.ngram_jaccard_pairs(_docs(spark, 1), n=3, threshold=0.1)
     many = dedup.ngram_jaccard_pairs(_docs(spark, 8), n=3, threshold=0.1)
     assert _rows(one) == _rows(many)
+
+
+# --- partition_documents: parse tasks sized by bytes ----------------------
+
+
+@contextlib.contextmanager
+def _conf(spark, key, value):
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _small_files(spark, tmp_path):
+    n = max(60, 4 * spark.sparkContext.defaultParallelism)
+    for i in range(n):
+        (tmp_path / f"doc{i:03d}.txt").write_text(
+            f"Section {i}\n\n" + f"Filler sentence number {i} for the parse. " * 60
+        )
+    return str(tmp_path), n
+
+
+def _parse(spark, src):
+    from unstructured_spark.operators.partition_auto import partition_documents
+    from unstructured_spark.sources.files import read_documents
+
+    docs = read_documents(spark, src)
+    els = partition_documents(docs)
+    plan = els._jdf.queryExecution().sparkPlan().toString()
+    return docs.rdd.getNumPartitions(), els.rdd.getNumPartitions(), plan, _rows(els)
+
+
+def test_partition_coalesces_small_file_splits_by_bytes(spark, tmp_path):
+    """Many small files read as one split each are parsed in 2 ×
+    defaultParallelism tasks, coalesced with no shuffle; with
+    maxPartitionBytes lowered until the size estimate needs more tasks
+    than there are splits, the splits are left as they are. The element
+    rows are the same either way."""
+    p = spark.sparkContext.defaultParallelism
+    src, n = _small_files(spark, tmp_path)
+    # a split as large as one file's 4 MB open cost: one split per file
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", str(4 << 20)):
+        splits, tasks, plan, coalesced = _parse(spark, src)
+    assert splits == n
+    assert tasks == 2 * p
+    assert "Coalesce" in plan and "Exchange" not in plan
+
+    with _conf(spark, "spark.sql.files.maxPartitionBytes", "1024"):
+        splits, tasks, plan, as_is = _parse(spark, src)
+    assert splits == tasks == n
+    assert "Coalesce" not in plan and "Exchange" not in plan
+    assert as_is == coalesced
+    doc_id = ELEMENT_COLUMNS.index("doc_id")
+    assert len({r[doc_id] for r in as_is}) == n  # every document parsed

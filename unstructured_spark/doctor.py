@@ -188,7 +188,7 @@ def _optional_import_rows() -> list[tuple[str, str, str]]:
 
 def build_report() -> str:
     """Full diagnostics: engine, registered agents, optional imports,
-    per-format readiness."""
+    per-format readiness, and the on-demand UDF profiler switch."""
     lines = ["unstructured_spark capability report", ""]
     try:
         import pyspark
@@ -214,6 +214,13 @@ def build_report() -> str:
         lines.append(f"  {fmt:8s} {'ready' if r.ready else 'gated':8s} {r.messages[0].split(': ', 1)[1]}")
     for fmt, needs in UNSUPPORTED_FORMATS.items():
         lines.append(f"  {fmt:8s} missing  needs {needs}")
+    lines.append("")
+    # per-UDF cProfile output for every mapInPandas (parse, chunk, embed)
+    lines.append("python udf profile (on demand):")
+    lines.append(
+        '  spark.conf.set("spark.sql.pyspark.udf.profiler", "perf"), '
+        'run the job, then spark.profile.show(type="perf")'
+    )
     return "\n".join(lines) + "\n"
 
 

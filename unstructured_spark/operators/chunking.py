@@ -346,9 +346,9 @@ def _split_table_rows(
             if not r.is_header:
                 break
             header_rows.append(r)
-    header_text = " ".join(t for r in header_rows for t in r.iter_cell_texts())
+    header_text = " ".join(t for r in header_rows for t in r.cell_texts)
     max_header_row_len = max(
-        (opts.measure(" ".join(r.iter_cell_texts())) for r in header_rows), default=0
+        (opts.measure(r.text) for r in header_rows), default=0
     )
     should_repeat = bool(header_rows) and max_header_row_len <= (maxlen_hard + 1) // 2
     carried = len(header_rows) if should_repeat else 0
@@ -401,7 +401,7 @@ def _split_table_rows(
             cells.clear()
             yield text, f"<table><tr>{tds}</tr></table>"
 
-        for cell in row.iter_cells():
+        for cell in row.cells:
             if not cells_fit(cell):
                 yield from flush_cells()
             if cells_fit(cell):
@@ -416,7 +416,7 @@ def _split_table_rows(
     acc_max = [maxlen(True)]
 
     def row_len(row) -> int:
-        return opts.measure(" ".join(row.iter_cell_texts()))
+        return opts.measure(row.text)
 
     def rows_fit(row) -> bool:
         return acc_max[0] - len(acc_rows) - acc_len[0] >= row_len(row)
@@ -424,7 +424,7 @@ def _split_table_rows(
     def flush_rows():
         if not acc_rows:
             return
-        text = " ".join(t for r in acc_rows for t in r.iter_cell_texts())
+        text = " ".join(t for r in acc_rows for t in r.cell_texts)
         trs = "".join(r.html for r in acc_rows)
         acc_rows.clear()
         acc_len[0] = 0

@@ -16,6 +16,7 @@ from __future__ import annotations
 import html as _html_mod
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 from html.parser import HTMLParser
 
 _KEEP_ATTRS = ("colspan", "rowspan")
@@ -113,43 +114,49 @@ def _inner_html(node: _Node) -> str:
 
 @dataclass
 class HtmlCell:
-    """A compactified ``<td>`` (reference html_table.py:193-215)."""
+    """A compactified ``<td>`` (reference html_table.py:193-215). Text
+    and HTML are built on first read and kept: the table splitter reads
+    each several times."""
 
     node: _Node
 
-    @property
+    @cached_property
     def text(self) -> str:
         return " ".join(_text_content(self.node).split())
 
-    @property
+    @cached_property
     def html(self) -> str:
         return _compact_html(self.node) if self.text else "<td/>"
 
 
 @dataclass
 class HtmlRow:
-    """A compactified ``<tr>`` (reference html_table.py:149-190)."""
+    """A compactified ``<tr>`` (reference html_table.py:149-190), with
+    its cell list, texts and HTML each built once."""
 
     node: _Node
     is_header: bool = False
 
-    @property
+    @cached_property
     def html(self) -> str:
         return _compact_html(self.node)
 
-    def iter_cells(self):
-        for c in self.node.children:
-            if isinstance(c, _Node) and c.tag in ("td", "th"):
-                yield HtmlCell(c)
+    @cached_property
+    def cells(self) -> list[HtmlCell]:
+        return [
+            HtmlCell(c)
+            for c in self.node.children
+            if isinstance(c, _Node) and c.tag in ("td", "th")
+        ]
 
-    def iter_cell_texts(self):
-        for cell in self.iter_cells():
-            if cell.text:
-                yield cell.text
+    @cached_property
+    def cell_texts(self) -> list[str]:
+        """Texts of the non-empty cells."""
+        return [c.text for c in self.cells if c.text]
 
-    @property
+    @cached_property
     def text(self) -> str:
-        return " ".join(self.iter_cell_texts())
+        return " ".join(self.cell_texts)
 
     @property
     def header_html(self) -> str:
@@ -199,4 +206,4 @@ def table_html(rows: list[HtmlRow]) -> str:
 
 def table_text(rows: list[HtmlRow]) -> str:
     """Clean concatenated text (reference HtmlTable.text, html_table.py:141-146)."""
-    return " ".join(" ".join(r.iter_cell_texts()) for r in rows).strip()
+    return " ".join(r.text for r in rows).strip()

@@ -14,10 +14,7 @@ for filtering element tables by language (pipelines.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from unstructured_spark.schema import ELEMENT_COLUMNS
 
 # category ruleset for hierarchy (reference metadata.py:36-60): maps a
 # parent category to the child categories it may adopt. The ruleset
@@ -36,15 +33,6 @@ _HIERARCHY_RULESET: dict[str, tuple[str, ...]] = {
     "Title": _CHILD_CATEGORIES,
     "Header": ("Title",) + _CHILD_CATEGORIES,
 }
-
-
-def widen_to_element_schema(df: DataFrame) -> DataFrame:
-    """Project to the full canonical element schema, nulling absent cols."""
-    cols = [
-        F.col(c) if c in df.columns else F.lit(None).alias(c)
-        for c in ELEMENT_COLUMNS
-    ]
-    return df.select(*cols)
 
 
 # ---------------------------------------------------------------------------

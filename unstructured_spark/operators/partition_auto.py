@@ -7,9 +7,12 @@ rows] → metadata finalization (hash ids, languages, hierarchy).
 
 Scale design (SURVEY §4):
 - one input row → N output rows entirely executor-side; no shuffle in
-  the parse stage. Parallelism = input splits; for few-large-docs skew,
-  ``repartition(n)`` the documents DF first (cheap: rows are (path,
-  bytes)).
+  the parse stage. Parallelism is sized by bytes (``_size_parse_tasks``):
+  many small files coalesce to about two tasks per core, since each
+  Python task pays a fixed start; fewer splits than cores spread by a
+  ``repartition`` (cheap: rows are (path, bytes)).
+- ``partition_and_chunk`` runs the chunk fold inside the same UDF, so
+  partition → chunk is one stage with no exchange.
 - detection reads only the head bytes; parsers are lazily imported per
   executor process (the reference's partitioner cache trick).
 - at 100 TB, content should be paths into object storage with
@@ -65,6 +68,32 @@ def document_rows(
     return py_finalize_doc(rows, doc_id=doc_id, filename=base)
 
 
+def _size_parse_tasks(narrowed: DataFrame) -> DataFrame:
+    """Parse parallelism sized by input bytes rather than input splits.
+
+    Every Python task pays a fixed start before its first row (145-185
+    ms on a 4-core host, PySpark's per-task import-cache reset), and
+    ``binaryFile`` pads each file with ``openCostInBytes`` (4 MB) when
+    it packs splits: 1,200 office files of 5.3 MB read as 38 splits.
+    Such inputs coalesce, with no shuffle, to ``max(2 ×
+    defaultParallelism, ceil(size estimate / maxPartitionBytes))``
+    tasks. The estimate is the optimizer's, so it runs no job; an
+    unknown size reads as Long.MaxValue and never coalesces, nor does a
+    scan whose bytes fill its splits. Inputs with fewer splits than
+    cores (one parquet file is one split) spread to defaultParallelism.
+    """
+    spark = narrowed.sparkSession
+    parallelism = spark.sparkContext.defaultParallelism
+    n = narrowed.rdd.getNumPartitions()
+    if n < parallelism:
+        return narrowed.repartition(parallelism)
+    plan = narrowed._jdf.queryExecution().optimizedPlan()
+    estimate = int(plan.stats().sizeInBytes())
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    target = max(2 * parallelism, -(-estimate // split_bytes))
+    return narrowed.coalesce(target) if n > target else narrowed
+
+
 def partition_documents(
     df: DataFrame,
     *,
@@ -81,7 +110,8 @@ def partition_documents(
     Metadata finalization (hash ids, doc language, hierarchy) happens
     INSIDE the parse UDF (``document_rows``): a document is fully
     contained in one input row, so these are per-row pure functions —
-    zero shuffles for the whole partition+metadata pipeline.
+    zero shuffles for the whole partition+metadata pipeline. A batch
+    input's task count is sized by its bytes first (``_size_parse_tasks``).
 
     Extra ``parser_kwargs`` flow through ``partition_bytes`` to the
     per-format partitioners (e.g. ``strategy=``, ``extract_forms=``,
@@ -100,13 +130,9 @@ def partition_documents(
     if content_type and content_type in df.columns:
         cols.append(content_type)
     narrowed = df.select(*cols)
-    # spread few-large-files inputs across the cluster: parse parallelism
-    # equals input partitions, and a single parquet file is one split.
-    # (streaming microbatches manage their own partitioning — no .rdd)
+    # streaming microbatches manage their own partitioning — no .rdd
     if not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if narrowed.rdd.getNumPartitions() < target:
-            narrowed = narrowed.repartition(target)
+        narrowed = _size_parse_tasks(narrowed)
     path_col = path if path in narrowed.columns else None
     ct_col = content_type if content_type in narrowed.columns else None
 

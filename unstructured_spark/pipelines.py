@@ -7,7 +7,7 @@ RAG ingestion run actually executes, built from the engine's operators.
 
 Shuffle bill of the whole flow (see SCALING.md):
   - partition: zero (mapInPandas, per-doc finalize in-UDF)
-  - chunk: one exchange clustering elements by doc
+  - chunk: zero (the per-doc fold runs inside the parse UDF)
   - quality gate: zero (array expressions + filter)
   - near-dup drop: the dedup sub-pipeline's bucket-keyed shuffles over
     the (small) chunk-text table; the corpus filter itself is a
@@ -47,19 +47,17 @@ def training_data_pipeline(
     override via ``quality_kwargs``). Near-dedup treats each chunk as a
     document keyed by ``element_id``.
     """
-    from unstructured_spark.operators.chunking import chunk as chunk_op
     from unstructured_spark.operators.dedup import drop_near_duplicates
-    from unstructured_spark.operators.partition_auto import partition_documents
+    from unstructured_spark.operators.partition_auto import partition_and_chunk
     from unstructured_spark.operators.quality_filters import gopher_filter
 
-    # partition → exchange → chunk rather than partition_and_chunk's
-    # in-UDF fold: on the full RAG pass (chunk, embed, md5 window,
-    # parquet) this exchange path measured faster, 8.3 vs 10.4 s in 8/8
-    # interleaved pairs on 4 cores, although partition+chunk alone is
-    # faster folded. The per-layer benchmark trace patches these two
-    # module attributes, hence the function-local imports.
-    elements = partition_documents(documents)
-    chunks = chunk_op(elements, strategy=chunking_strategy, **(chunk_kwargs or {}))
+    # the chunk fold runs inside the parse UDF: no doc_id exchange, no
+    # sort, one Arrow crossing fewer per element row, and one Python
+    # node fewer, whose tasks each pay a fixed worker start (SCALING.md
+    # "Chunking"). The rows equal chunk(partition_documents(documents)).
+    chunks = partition_and_chunk(
+        documents, chunking_strategy=chunking_strategy, chunk_kwargs=chunk_kwargs
+    )
 
     if quality_filter:
         qkw = {"min_words": 10, "min_stopwords": 0, "min_mean_word_len": 2.0}
@@ -246,11 +244,12 @@ def pretraining_corpus_e2e(
     column; the scoring side is always keyed on ``element_id``.
 
     Shuffle bill (scripts/demo_corpus_e2e.py measures the realized
-    exchange count; SCALING.md records it): partition and hygiene are
-    map-only; chunking is one doc-clustered exchange; dedup/split are
-    the bucket-keyed LSH + pointer-doubling sub-plans (never
-    all-pairs) ending in a broadcast anti-join/left join against the
-    corpus; packing is the block-totals distributed prefix sum.
+    exchange count; SCALING.md records it): partition, chunking and
+    hygiene are map-only (the chunk fold runs in the parse UDF);
+    dedup/split are the bucket-keyed LSH + pointer-doubling sub-plans
+    (never all-pairs) ending in a broadcast anti-join/left join
+    against the corpus; packing is the block-totals distributed
+    prefix sum.
 
     Packing keys on ``doc_id * 1_000_000 + element_index`` — numeric
     doc ids required (the parquet corpus tables' bigint ids). A
@@ -258,20 +257,20 @@ def pretraining_corpus_e2e(
     a blind cast would null every id, pass ``pack_sequences``' dtype
     guard, and return an EMPTY packed result with no error.
     """
-    from unstructured_spark.operators.chunking import chunk as chunk_op
     from unstructured_spark.operators.dedup import (
         drop_near_duplicates,
         leakage_safe_split,
     )
     from unstructured_spark.operators.metadata import detect_language_expr
-    from unstructured_spark.operators.partition_auto import partition_documents
+    from unstructured_spark.operators.partition_auto import partition_and_chunk
     from unstructured_spark.operators.pii import redact_docs
     from unstructured_spark.operators.quality_filters import gopher_filter
     from unstructured_spark.operators.sampling import pack_sequences
 
-    # exchange path on purpose: see training_data_pipeline
-    elements = partition_documents(documents)
-    chunks = chunk_op(elements, strategy="by_title", **(chunk_kwargs or {}))
+    # chunk fold inside the parse UDF, as in training_data_pipeline
+    chunks = partition_and_chunk(
+        documents, chunking_strategy="by_title", chunk_kwargs=chunk_kwargs
+    )
 
     # hygiene — all three stages map-only
     if languages:
