@@ -5,6 +5,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests.fixtures import REFERENCE  # noqa: E402
 from unstructured_spark.session import get_spark  # noqa: E402
 
 
@@ -25,17 +26,34 @@ def pytest_deselected(items):
     _slow_deselected.extend(i for i in items if i.get_closest_marker("slow"))
 
 
-def pytest_terminal_summary(terminalreporter):
-    """One line naming what the default ``-m "not slow"`` left out, so a
-    green fast-tier run never reads as the full suite."""
-    if not _slow_deselected:
-        return
+def _by_file(nodeids):
     files = {}
-    for item in _slow_deselected:
-        name = item.nodeid.split("::")[0]
+    for nodeid in nodeids:
+        name = nodeid.split("::")[0]
         files[name] = files.get(name, 0) + 1
-    listing = ", ".join(f"{f} ({n})" for f, n in sorted(files.items()))
-    terminalreporter.write_line(
-        f"slow tier: {len(_slow_deselected)} tests deselected by "
-        f'-m "not slow" from {len(files)} file(s): {listing}'
-    )
+    return files, ", ".join(f"{f} ({n})" for f, n in sorted(files.items()))
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line naming what the default ``-m "not slow"`` left out, and
+    one naming the tests skipped because a file of the upstream checkout
+    (``tests.fixtures.REFERENCE``) is absent, so a green run never reads
+    as the full suite."""
+    if _slow_deselected:
+        files, listing = _by_file(i.nodeid for i in _slow_deselected)
+        terminalreporter.write_line(
+            f"slow tier: {len(_slow_deselected)} tests deselected by "
+            f'-m "not slow" from {len(files)} file(s): {listing}'
+        )
+    needs = f"Skipped: needs {REFERENCE}"
+    held = [
+        r.nodeid
+        for r in terminalreporter.stats.get("skipped", [])
+        if isinstance(r.longrepr, tuple) and r.longrepr[2].startswith(needs)
+    ]
+    if held:
+        files, listing = _by_file(held)
+        terminalreporter.write_line(
+            f"reference files: {len(held)} tests skipped, their {REFERENCE} "
+            f"input absent, from {len(files)} file(s): {listing}"
+        )

@@ -97,6 +97,7 @@ EMPTY_TEXT = ""
 
 import io
 import zipfile
+from pathlib import Path
 
 _W = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 _A = "http://schemas.openxmlformats.org/drawingml/2006/main"
@@ -293,9 +294,10 @@ def make_pdf() -> bytes:
     return pdf_from_objects(objs)
 
 
-def pdf_from_objects(objs: list[bytes]) -> bytes:
+def pdf_from_objects(objs: list[bytes], trailer: bytes = b"") -> bytes:
     """Classic-xref PDF file from object bodies numbered 1..n; object
-    1 is the catalog."""
+    1 is the catalog. ``trailer`` holds extra trailer entries (e.g.
+    ``/Encrypt`` and ``/ID``)."""
     buf = bytearray(b"%PDF-1.4\n")
     offsets = []
     for i, body in enumerate(objs, start=1):
@@ -306,10 +308,174 @@ def pdf_from_objects(objs: list[bytes]) -> bytes:
     for off in offsets:
         buf += b"%010d 00000 n \n" % off
     buf += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
+        b"trailer\n<< /Size %d /Root 1 0 R %s>>\nstartxref\n%d\n%%%%EOF\n"
+        % (len(objs) + 1, trailer, xref_at)
     )
     return bytes(buf)
+
+
+def make_paged_pdf(pages: int) -> bytes:
+    """Text PDF of ``pages`` pages, one narrative line each; the page
+    tree's ``/Count`` and ``/Kids`` both declare ``pages``."""
+    objs: list[bytes] = [b"", b"", b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"]
+    kids = []
+    for n in range(1, pages + 1):
+        c = (
+            b"BT /F1 12 Tf 72 720 Td "
+            b"(Page %d of the paged fixture carries one short paragraph.) Tj ET" % n
+        )
+        objs.append(
+            b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            b"/Contents %d 0 R /Resources << /Font << /F1 3 0 R >> >> >>" % (len(objs) + 2)
+        )
+        kids.append(b"%d 0 R" % len(objs))
+        objs.append(b"<< /Length %d >>\nstream\n%s\nendstream" % (len(c), c))
+    objs[0] = b"<< /Type /Catalog /Pages 2 0 R >>"
+    objs[1] = b"<< /Type /Pages /Kids [%s] /Count %d >>" % (b" ".join(kids), pages)
+    return pdf_from_objects(objs)
+
+
+# the password padding string of ISO 32000-1 Algorithm 2 step (a), kept
+# apart from pdf_crypto's copy so that a wrong constant there shows
+_PDF_PAD = bytes.fromhex(
+    "28bf4e5e4e758a4164004e56fffa01082e2e00b6d0683e802f0ca9fe6453697a"
+)
+
+
+def make_encrypted_pdf(
+    user_password: bytes = b"", owner_password: bytes = b"owner"
+) -> bytes:
+    """One-page text PDF under the Standard security handler, /V 2 /R 3,
+    128-bit RC4, per ISO 32000-1 §7.6.3.3: /O by Algorithm 3, the file
+    key by Algorithm 2, /U by Algorithm 5, and the content stream
+    encrypted with its per-object key (Algorithm 1). An empty
+    ``user_password`` gives an owner-only ("copy-protected") document
+    that any reader opens."""
+    import hashlib
+    import struct
+
+    from unstructured_spark.parsers.pdf_crypto import rc4
+
+    n, p = 16, -4
+    file_id = hashlib.md5(b"make_encrypted_pdf").digest()
+
+    def pad(pwd: bytes) -> bytes:
+        return (pwd + _PDF_PAD)[:32]
+
+    def rc4_20(key: bytes, data: bytes) -> bytes:
+        # R3: one pass under the key, then 19 under key XOR i
+        for i in range(20):
+            data = rc4(bytes(b ^ i for b in key), data)
+        return data
+
+    # Algorithm 3: /O from the owner and user passwords
+    h = hashlib.md5(pad(owner_password or user_password)).digest()
+    for _ in range(50):
+        h = hashlib.md5(h).digest()
+    o = rc4_20(h[:n], pad(user_password))
+    # Algorithm 2: the file key
+    key = hashlib.md5(pad(user_password) + o + struct.pack("<i", p) + file_id).digest()
+    for _ in range(50):
+        key = hashlib.md5(key[:n]).digest()
+    key = key[:n]
+    # Algorithm 5: /U, 16 bytes of check value and 16 of padding
+    u = rc4_20(key, hashlib.md5(_PDF_PAD + file_id).digest()) + bytes(16)
+
+    text = b"BT /F1 12 Tf 72 720 Td (The protected paragraph reads back as plain text.) Tj ET"
+    content_num = 4
+    # Algorithm 1: low 3 bytes of the object number, low 2 of gen 0
+    obj_key = hashlib.md5(key + struct.pack("<i", content_num)[:3] + bytes(2)).digest()
+    c = rc4(obj_key[: min(n + 5, 16)], text)
+    objs = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+        b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        b"/Contents 4 0 R /Resources << /Font << /F1 5 0 R >> >> >>",
+        b"<< /Length %d >>\nstream\n%s\nendstream" % (len(c), c),
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>",
+        b"<< /Filter /Standard /V 2 /R 3 /Length 128 /P %d /O <%s> /U <%s> >>"
+        % (p, o.hex().encode(), u.hex().encode()),
+    ]
+    return pdf_from_objects(
+        objs, trailer=b"/Encrypt 6 0 R /ID [<%s> <%s>] " % ((file_id.hex().encode(),) * 2)
+    )
+
+
+def _gradient(w: int, h: int) -> bytes:
+    return bytes(
+        v for y in range(h) for x in range(w) for v in ((x * 7) % 256, (y * 11) % 256, (x * y) % 256)
+    )
+
+
+def make_bmp(w: int, h: int) -> bytes:
+    """24-bit uncompressed (BI_RGB) BMP: a 14-byte BITMAPFILEHEADER,
+    a 40-byte BITMAPINFOHEADER with a positive height (rows stored
+    bottom-up), BGR pixels, each row padded to a multiple of 4 bytes."""
+    import struct
+
+    rgb = _gradient(w, h)
+    row_size = (w * 3 + 3) & ~3
+    pixels = bytearray()
+    for y in reversed(range(h)):
+        row = bytearray(rgb[y * w * 3 : (y + 1) * w * 3])
+        row[0::3], row[2::3] = row[2::3], row[0::3]  # RGB -> BGR
+        pixels += row + bytes(row_size - w * 3)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(pixels), 2835, 2835, 0, 0)
+    header = struct.pack("<2sIHHI", b"BM", 14 + len(info) + len(pixels), 0, 0, 14 + len(info))
+    return header + info + bytes(pixels)
+
+
+def make_tiff(sizes: list[tuple[int, int]]) -> bytes:
+    """Little-endian baseline TIFF 6.0 RGB file, one uncompressed page
+    (one strip, 8 bits per sample, 72 dpi) per ``(width, height)`` in
+    ``sizes``; each IFD links to the next and the last ends with 0."""
+    import struct
+
+    buf = bytearray(b"II*\x00\x00\x00\x00\x00")
+    link = 4  # where the offset of the next IFD goes
+    for w, h in sizes:
+        strip = _gradient(w, h)
+        strip_at = len(buf)
+        buf += strip + bytes(len(buf) % 2)  # IFDs start on a word boundary
+        extra_at = len(buf)  # BitsPerSample (3 SHORTs), then two RATIONALs
+        buf += struct.pack("<3H", 8, 8, 8) + bytes(2) + struct.pack("<4I", 72, 1, 72, 1)
+        entries = [
+            (256, 4, 1, w),  # ImageWidth
+            (257, 4, 1, h),  # ImageLength
+            (258, 3, 3, extra_at),  # BitsPerSample
+            (259, 3, 1, 1),  # Compression: none
+            (262, 3, 1, 2),  # PhotometricInterpretation: RGB
+            (273, 4, 1, strip_at),  # StripOffsets
+            (277, 3, 1, 3),  # SamplesPerPixel
+            (278, 4, 1, h),  # RowsPerStrip
+            (279, 4, 1, len(strip)),  # StripByteCounts
+            (282, 5, 1, extra_at + 8),  # XResolution
+            (283, 5, 1, extra_at + 16),  # YResolution
+            (296, 3, 1, 2),  # ResolutionUnit: inch
+        ]
+        struct.pack_into("<I", buf, link, len(buf))
+        buf += struct.pack("<H", len(entries))
+        for tag, typ, count, value in entries:
+            fmt = "<HHIH2x" if typ == 3 and count == 1 else "<HHII"
+            buf += struct.pack(fmt, tag, typ, count, value)
+        link = len(buf)
+        buf += bytes(4)
+    return bytes(buf)
+
+
+# The upstream checkout: its example-docs and the goldens its ingest
+# tests produced. Tests that compare against those files run only where
+# the checkout is present.
+REFERENCE = Path("/root/reference")
+
+
+def needs(*paths: Path):
+    """Skip mark for a test that reads ``paths``: it runs wherever all of
+    them exist, and is skipped as "needs <missing paths>" elsewhere."""
+    import pytest
+
+    missing = [str(p) for p in paths if not Path(p).exists()]
+    return pytest.mark.skipif(bool(missing), reason="needs " + ", ".join(missing))
 
 
 class WordTokenizer:

@@ -12,6 +12,7 @@ from pathlib import Path
 import numpy as np
 import pytest
 
+from tests.fixtures import needs
 from unstructured_spark.parsers.audio_parser import (
     audio_to_elements,
     energy_segments,
@@ -47,6 +48,7 @@ class TestParseWav:
         assert len(samples) == 3 * 8000
         assert abs(float(np.abs(samples[:100]).max()) - 0.5) < 0.01
 
+    @needs(CANTINA)
     def test_real_reference_wav(self):
         rate, samples = parse_wav(CANTINA.read_bytes())
         assert rate == 22050
@@ -88,6 +90,7 @@ class TestEnergySegments:
         segs = energy_segments(_tone_silence_tone()[:8000], 8000)
         assert len(segs) == 1
 
+    @needs(CANTINA)
     def test_real_wav_has_segments(self):
         rate, samples = parse_wav(CANTINA.read_bytes())
         segs = energy_segments(samples, rate)
@@ -134,18 +137,25 @@ class TestSegmentAudioOperator:
         from unstructured_spark.operators.multimodal import segment_audio
 
         wav = _wav_bytes(_tone_silence_tone())
-        df = spark.createDataFrame(
-            [("a", bytearray(wav)), ("b", bytearray(CANTINA.read_bytes())), ("bad", bytearray(b"nope"))],
-            "doc_id string, content binary",
-        )
-        rows = segment_audio(df).collect()
-        by_doc = {}
-        for r in rows:
-            by_doc.setdefault(r["doc_id"], []).append(r)
-        assert len(by_doc["a"]) == 2
-        assert "b" in by_doc
-        assert "bad" not in by_doc  # per-row isolation
-        assert all(r["end_seconds"] > r["start_seconds"] for r in rows)
+        # row "b" has CantinaBand3.wav's header values (22050 Hz, 16-bit
+        # mono, ~3 s), so the batch mixes sample rates
+        t = np.arange(3 * 22050) / 22050
+        bs = [_wav_bytes(0.4 * np.sin(2 * math.pi * 330 * t), rate=22050)]
+        if CANTINA.exists():
+            bs.append(CANTINA.read_bytes())
+        for b in bs:
+            df = spark.createDataFrame(
+                [("a", bytearray(wav)), ("b", bytearray(b)), ("bad", bytearray(b"nope"))],
+                "doc_id string, content binary",
+            )
+            rows = segment_audio(df).collect()
+            by_doc = {}
+            for r in rows:
+                by_doc.setdefault(r["doc_id"], []).append(r)
+            assert len(by_doc["a"]) == 2
+            assert "b" in by_doc
+            assert "bad" not in by_doc  # per-row isolation
+            assert all(r["end_seconds"] > r["start_seconds"] for r in rows)
 
 
 class TestCompressedAudioPlug:

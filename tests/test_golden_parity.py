@@ -17,10 +17,12 @@ from pathlib import Path
 
 import pytest
 
+from tests.fixtures import needs
 from unstructured_spark.parsers.dispatch import partition_bytes
 
 DOCS = Path("/root/reference/example-docs")
 GOLD = Path("/root/reference/test_unstructured_ingest/expected-structured-output")
+SCRIPTS = DOCS.parent / "scripts"
 
 WIRE_TYPE = {"Text": "UncategorizedText"}
 
@@ -49,7 +51,10 @@ def _golden(rel: str) -> list[dict]:
     return json.loads((GOLD / rel).read_text())
 
 
-@pytest.mark.parametrize("name,golden", EXACT_CASES, ids=[c[0] for c in EXACT_CASES])
+@pytest.mark.parametrize(
+    "name,golden",
+    [pytest.param(n, g, id=n, marks=needs(DOCS / n, GOLD / g)) for n, g in EXACT_CASES],
+)
 def test_exact_type_and_text_parity(name, golden):
     ref = _golden(golden)
     ours = _ours(name)
@@ -57,6 +62,7 @@ def test_exact_type_and_text_parity(name, golden):
     assert [(e["text"] or "") for e in ours] == [e["text"] for e in ref]
 
 
+@needs(GOLD / "gcs/ideas-page.html.json", DOCS / "ideas-page.html")
 def test_html_table_parity_normalized():
     """ideas-page.html: one Table element; the reference preserves raw
     source whitespace (newlines, double spaces) inside HTML table text
@@ -69,6 +75,10 @@ def test_html_table_parity_normalized():
     assert norm(ours[0]["text"]) == norm(ref[0]["text"])
 
 
+@needs(
+    GOLD / "local-single-file-with-encoding/fake-html-cp1252.html.json",
+    DOCS / "fake-html-cp1252.html",
+)
 def test_cp1252_html_decodes_properly():
     """fake-html-cp1252.html: the reference's OWN golden is mojibake
     ('trčs', 'nińo' — cp1252 bytes decoded as cp1250). We assert our
@@ -85,10 +95,12 @@ def test_cp1252_html_decodes_properly():
 @pytest.mark.parametrize(
     "src",
     [
-        "/root/reference/scripts/minio-test-helpers/wiki_movie_plots_small.csv",
-        "/root/reference/scripts/sftp-test-helpers/folder1/folder2/wiki_movie_plots_small2.csv",
+        pytest.param(str(src), id=case, marks=needs(src, GOLD))
+        for case, src in [
+            ("minio-csv", SCRIPTS / "minio-test-helpers/wiki_movie_plots_small.csv"),
+            ("sftp-csv", SCRIPTS / "sftp-test-helpers/folder1/folder2/wiki_movie_plots_small2.csv"),
+        ]
     ],
-    ids=["minio-csv", "sftp-csv"],
 )
 def test_csv_golden_parity(src):
     """CSV → single Table element. The reference golden encodes real
@@ -106,6 +118,7 @@ def test_csv_golden_parity(src):
     assert norm(ours[0]["text"]) == norm(ref[0]["text"])
 
 
+@needs(GOLD / "local-single-file-basic-chunking/handbook-1p.docx.json", DOCS / "handbook-1p.docx")
 def test_handbook_docx_elements_via_orig_elements_codec():
     """handbook-1p.docx: the golden is CHUNKED output, but each chunk
     carries the reference's raw elements in the compressed
@@ -126,6 +139,10 @@ def test_handbook_docx_elements_via_orig_elements_codec():
     assert [(e["text"] or "") for e in ours] == [e["text"] for e in ref_els]
 
 
+@needs(
+    GOLD / "local-single-file/UDHR_first_article_all.txt.json",
+    DOCS / "language-docs/UDHR_first_article_all.txt",
+)
 def test_udhr_multilingual_golden():
     """UDHR first article in ~500 languages — the hardest text-splitting
     fixture. Element COUNT and every TEXT match the reference exactly
@@ -167,6 +184,7 @@ def test_serde_wire_type_round_trip(spark):
     assert els[0]["type"] == "Text"
 
 
+@needs(GOLD / "local-single-file-basic-chunking/handbook-1p.docx.json", DOCS / "handbook-1p.docx")
 def test_chunked_golden_byte_exact():
     """Chunk-boundary parity with reference-PRODUCED chunked output:
     basic chunking at max_characters=150, overlap=20 over
@@ -182,6 +200,7 @@ def test_chunked_golden_byte_exact():
     assert [c.to_dict()["type"] for c in ours] == [c["type"] for c in ref]
 
 
+@needs(GOLD.parent / "expected-structured-output-markdown", GOLD)
 def test_markdown_render_matches_every_reference_golden():
     """elements_to_md reproduces ALL 172 reference-produced markdown
     renders byte-for-byte (expected-structured-output-markdown tree:
@@ -205,6 +224,7 @@ def test_markdown_render_matches_every_reference_golden():
     assert checked == len(mds)
 
 
+@needs(GOLD.parent / "expected-structured-output-html", GOLD)
 def test_html_render_matches_every_reference_golden():
     """elements_to_html reproduces ALL 172 reference BeautifulSoup-
     prettify renders byte-for-byte (expected-structured-output-html:

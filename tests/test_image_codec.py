@@ -7,6 +7,7 @@ from pathlib import Path
 
 import pytest
 
+from tests.fixtures import make_tiff, needs
 from unstructured_spark.operators.multimodal import probe_bytes
 from unstructured_spark.parsers.image_codec import (
     ImageDecodeError,
@@ -68,6 +69,7 @@ class TestPngRoundTrip:
         assert (w2, h2, c2) == (w, h, channels)
         assert px2 == px
 
+    @needs(DOCS / "img" / "DA-1p.png")
     def test_real_reference_png(self):
         raw = (DOCS / "img" / "DA-1p.png").read_bytes()
         meta = probe_bytes(raw)
@@ -75,6 +77,7 @@ class TestPngRoundTrip:
         assert (w, h) == (meta["width"], meta["height"])
         assert len(px) == w * h * c
 
+    @needs(DOCS / "img" / "english-and-korean.png")
     def test_second_reference_png(self):
         raw = (DOCS / "img" / "english-and-korean.png").read_bytes()
         meta = probe_bytes(raw)
@@ -84,6 +87,7 @@ class TestPngRoundTrip:
 
 
 class TestBmp:
+    @needs(DOCS / "img" / "bmp_24.bmp")
     def test_real_reference_bmp(self):
         raw = (DOCS / "img" / "bmp_24.bmp").read_bytes()
         meta = probe_bytes(raw)
@@ -104,6 +108,7 @@ class TestGif:
 
 
 class TestJpeg:
+    @needs(DOCS / "img" / "example.jpg")
     def test_baseline_420_decodes(self):
         raw = (DOCS / "img" / "example.jpg").read_bytes()
         meta = probe_bytes(raw)
@@ -111,11 +116,13 @@ class TestJpeg:
         assert (w, h, c) == (meta["width"], meta["height"], 3)
         assert len(px) == w * h * 3
 
+    @needs(DOCS / "img" / "jpn-vert.jpeg")
     def test_grayscale_decodes(self):
         raw = (DOCS / "img" / "jpn-vert.jpeg").read_bytes()
         w, h, c, px = decode_image(raw)
         assert (w, h, c) == (169, 350, 1)
 
+    @needs(DOCS / "img" / "DA-1p.png", DOCS / "img" / "DA-1p.jpg")
     def test_cross_format_parity_with_png(self):
         """The reference ships the same page as PNG (lossless) and JPEG
         (lossy 4:4:4). Two fully independent decoders must agree to
@@ -157,6 +164,7 @@ class TestTransforms:
 
 
 class TestSparkOperators:
+    @needs(DOCS / "img" / "example.jpg")
     def test_decode_image_features_real_pixels(self, spark):
         from unstructured_spark.operators.multimodal import decode_image_features
 
@@ -254,6 +262,7 @@ class TestGifLzwTableGrowth:
 
 
 class TestTiff:
+    @needs(DOCS / "img" / "layout-parser-paper-combined.tiff")
     def test_multipage_real_fixture(self):
         from unstructured_spark.parsers.image_codec import decode_tiff_pages
 
@@ -262,6 +271,10 @@ class TestTiff:
         )
         assert [(w, h, c) for w, h, c, _ in pages] == [(612, 792, 3), (791, 1024, 3)]
 
+    @needs(
+        DOCS / "img" / "layout-parser-paper-fast.tiff",
+        DOCS / "img" / "layout-parser-paper-fast.jpg",
+    )
     def test_cross_format_parity_with_jpeg(self):
         """fast.tiff and fast.jpg are renders of the same page: the
         TIFF strip assembly must agree with the independently-validated
@@ -313,16 +326,17 @@ class TestTiff:
         from unstructured_spark.parsers.dispatch import partition_bytes
         from unstructured_spark.parsers.image_parser import set_ocr_agent
 
-        raw = (DOCS / "img" / "layout-parser-paper-combined.tiff").read_bytes()
+        cases = [(make_tiff([(60, 40), (30, 70)]), [(1, "60x40"), (2, "30x70")])]
+        combined = DOCS / "img" / "layout-parser-paper-combined.tiff"
+        if combined.exists():
+            cases.append((combined.read_bytes(), [(1, "612x792"), (2, "791x1024")]))
         set_ocr_agent(
             lambda a, w, h: [{"text": f"{w}x{h}", "x1": 0, "y1": 0, "x2": 50, "y2": 20}]
         )
         try:
-            els = partition_bytes(raw, filename="scan.tiff")
+            runs = [(partition_bytes(raw, filename="scan.tiff"), want) for raw, want in cases]
         finally:
             set_ocr_agent(None)
-        assert [(e["page_number"], e["text"]) for e in els] == [
-            (1, "612x792"),
-            (2, "791x1024"),
-        ]
-        assert els[0]["filetype"] == "image/tiff"
+        for els, want in runs:
+            assert [(e["page_number"], e["text"]) for e in els] == want
+            assert els[0]["filetype"] == "image/tiff"

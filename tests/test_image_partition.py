@@ -97,11 +97,15 @@ class TestHiResPipeline:
         assert [e["text"] for e in els] == ["left-top", "left-bottom", "right"]
 
     def test_gif_and_bmp_route(self, agents):
-        from pathlib import Path
+        from tests.fixtures import REFERENCE, make_bmp
 
-        raw = Path("/root/reference/example-docs/img/bmp_24.bmp").read_bytes()
-        els = partition_bytes(raw, filename="img.bmp")
-        assert els and els[0]["filetype"] == "image/bmp"
+        raws = [make_bmp(201, 100)]
+        bmp_24 = REFERENCE / "example-docs/img/bmp_24.bmp"
+        if bmp_24.exists():
+            raws.append(bmp_24.read_bytes())
+        for raw in raws:
+            els = partition_bytes(raw, filename="img.bmp")
+            assert els and els[0]["filetype"] == "image/bmp"
 
 
 class TestTranslateHook:

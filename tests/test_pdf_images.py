@@ -7,6 +7,7 @@ from pathlib import Path
 
 import pytest
 
+from tests.fixtures import needs
 from unstructured_spark.parsers.image_codec import decode_image
 from unstructured_spark.parsers.image_parser import set_layout_model, set_ocr_agent
 from unstructured_spark.parsers.pdf_images import (
@@ -20,6 +21,7 @@ PDFS = Path("/root/reference/example-docs/pdf")
 
 
 class TestExtract:
+    @needs(PDFS / "embedded-images.pdf")
     def test_jpeg_xobjects(self):
         recs = extract_pdf_images((PDFS / "embedded-images.pdf").read_bytes())
         assert len(recs) == 3
@@ -28,6 +30,7 @@ class TestExtract:
             w, h, c, px = decode_image(r["data"])
             assert (w, h) == (r["width"], r["height"]) == (325, 325)
 
+    @needs(PDFS / "pdf-with-ocr-text.pdf")
     def test_full_page_scan_extracts(self):
         recs = extract_pdf_images((PDFS / "pdf-with-ocr-text.pdf").read_bytes())
         assert len(recs) == 1
@@ -44,6 +47,7 @@ class TestExtract:
         w, h, c, px = decode_image(recs[0]["data"])
         assert (w, h, c) == (6, 4, 3)
 
+    @needs(PDFS / "embedded-images.pdf")
     def test_image_elements_shape(self):
         els = pdf_images_to_elements((PDFS / "embedded-images.pdf").read_bytes())
         assert len(els) == 3
@@ -54,6 +58,7 @@ class TestExtract:
 
 
 class TestFastPathWithExtraction:
+    @needs(PDFS / "embedded-images.pdf")
     def test_extract_images_kwarg_interleaves(self):
         raw = (PDFS / "embedded-images.pdf").read_bytes()
         plain = pdf_to_elements(raw)
@@ -64,6 +69,7 @@ class TestFastPathWithExtraction:
 
 
 class TestScannedRoute:
+    @needs(PDFS / "pdf-with-ocr-text.pdf")
     def test_ocr_only_with_registered_agent(self):
         raw = (PDFS / "pdf-with-ocr-text.pdf").read_bytes()
 
@@ -79,6 +85,7 @@ class TestScannedRoute:
         assert [e["text"] for e in els] == ["scanned words"]
         assert els[0]["page_number"] == 1
 
+    @needs(PDFS / "pdf-with-ocr-text.pdf")
     def test_pdf_to_elements_routes_hires_via_agents(self):
         raw = (PDFS / "pdf-with-ocr-text.pdf").read_bytes()
         set_layout_model(
@@ -95,6 +102,7 @@ class TestScannedRoute:
             set_ocr_agent(None)
         assert [e["text"] for e in els] == ["whole page"]
 
+    @needs(PDFS / "pdf-with-ocr-text.pdf")
     def test_hires_without_agents_falls_back_to_fast(self):
         # reference strategies.py fallback: hi_res without inference →
         # fast when the text layer is extractable (this scan has OCR text)
@@ -171,6 +179,7 @@ class TestOneBit:
         assert (dw, dh, dc) == (10, 4, 1)
         assert dpx[0] == 255 and dpx[1] == 0  # stripes survived
 
+    @needs(PDFS / "single_table.pdf")
     def test_icc_based_rgb_bitmap(self):
         from pathlib import Path
 
@@ -353,6 +362,7 @@ class TestScannedGolden:
                       "x2": w * 0.6, "y2": h * 0.93})
         return words
 
+    @needs(PDFS / "pdf-with-ocr-text.pdf")
     def test_matches_checked_in_golden(self):
         import json
 

@@ -214,6 +214,7 @@ class TestAnnotationsAndTransforms:
         with open(f"/root/reference/example-docs/pdf/{name}", "rb") as f:
             return f.read()
 
+    @fx.needs(Path(REF_PDF_DIR, "embedded-link.pdf"))
     def test_embedded_links_resolve_words(self):
         els = pdf_to_elements(self._read("embedded-link.pdf"))
         links = [l for e in els for l in (e.get("links") or [])]
@@ -226,6 +227,7 @@ class TestAnnotationsAndTransforms:
         assert links[-1]["text"] == "capturing"
         assert links[-1]["url"] == "http://www.apple.com"
 
+    @fx.needs(Path(REF_PDF_DIR, "embedded-link.pdf"))
     def test_link_start_index_points_into_text(self):
         els = pdf_to_elements(self._read("embedded-link.pdf"))
         for e in els:
@@ -233,6 +235,7 @@ class TestAnnotationsAndTransforms:
                 if l["start_index"] >= 0 and l["text"]:
                     assert e["text"][l["start_index"]:].startswith(l["text"])
 
+    @fx.needs(Path(REF_PDF_DIR, "multi-column.pdf"))
     def test_named_dest_cite_links(self):
         # academic internal cite links surface as named destinations
         # (reference expects e.g. url="cite.wu2019detectron2")
@@ -240,6 +243,7 @@ class TestAnnotationsAndTransforms:
         urls = {l["url"] for e in els for l in (e.get("links") or [])}
         assert any(u.startswith("cite.") for u in urls)
 
+    @fx.needs(Path(REF_PDF_DIR, "fake-bold-sample.pdf"))
     def test_fake_bold_dedup(self):
         els = pdf_to_elements(self._read("fake-bold-sample.pdf"))
         text = " ".join(e["text"] for e in els)
@@ -247,6 +251,7 @@ class TestAnnotationsAndTransforms:
         assert text.count("B O L D") == 1
         assert "B B O O" not in text
 
+    @fx.needs(Path(REF_PDF_DIR, "embedded-link.pdf"))
     def test_cm_tm_transform_chain_positions(self):
         # embedded-link.pdf positions text via `cm` translation + scaled
         # Tm; coordinates must land at true page coords, not text space
@@ -402,6 +407,7 @@ class TestEncryptedPdf:
         )
         assert rc4(b"Key", bytes.fromhex("BBF316E8D940AF0AD3")) == b"Plaintext"
 
+    @fx.needs(Path(REF_PDF_DIR, "copy-protected.pdf"))
     def test_copy_protected_pdf_extracts_text(self):
         raw = Path("/root/reference/example-docs/pdf/copy-protected.pdf").read_bytes()
         els = pdf_to_elements(raw)
@@ -412,10 +418,15 @@ class TestEncryptedPdf:
     def test_password_protected_pdf_raises(self):
         from unstructured_spark.parsers.pdf_crypto import PdfEncryptedError
 
-        raw = Path("/root/reference/example-docs/pdf/password.pdf").read_bytes()
-        with pytest.raises(PdfEncryptedError):
-            pdf_to_elements(raw)
+        raws = [fx.make_encrypted_pdf(user_password=b"secret", owner_password=b"owner")]
+        password_pdf = Path(f"{REF_PDF_DIR}/password.pdf")
+        if password_pdf.exists():
+            raws.append(password_pdf.read_bytes())
+        for raw in raws:
+            with pytest.raises(PdfEncryptedError):
+                pdf_to_elements(raw)
 
+    @fx.needs(Path(REF_PDF_DIR, "copy-protected.pdf"))
     def test_macroman_base_encoding_maps_ligatures(self):
         # the copy-protected fixture's fonts use MacRoman, where 0xDE
         # is 'fi' — a latin-1 fallback would read 'Þ'
@@ -475,24 +486,33 @@ class TestHiResMaxPages:
         )
 
         # the gate applies once hi_res is actually viable (agents
-        # registered); a 76-page scan against a 10-page cap fails fast
-        raw = Path(f"{REF_PDF_DIR}/failure-after-repair.pdf").read_bytes()
+        # registered); a 12-page document (or the reference's 76-page
+        # scan) against a 10-page cap fails fast
+        cases = [(fx.make_paged_pdf(12), 12)]
+        scan = Path(f"{REF_PDF_DIR}/failure-after-repair.pdf")
+        if scan.exists():
+            cases.append((scan.read_bytes(), 76))
         try:
             image_parser.set_ocr_agent(lambda arr, w, h: [])
-            with pytest.raises(PageCountExceededError) as ei:
-                pdf_to_elements(raw, strategy="hi_res", pdf_hi_res_max_pages=10)
-            assert ei.value.document_pages == 76
-            assert ei.value.pdf_hi_res_max_pages == 10
+            for raw, pages in cases:
+                with pytest.raises(PageCountExceededError) as ei:
+                    pdf_to_elements(raw, strategy="hi_res", pdf_hi_res_max_pages=10)
+                assert ei.value.document_pages == pages
+                assert ei.value.pdf_hi_res_max_pages == 10
         finally:
             image_parser.set_ocr_agent(None)
 
     def test_cap_of_none_disables_gate(self):
         from unstructured_spark.parsers.pdf_parser import pdf_to_elements
 
-        raw = Path(f"{REF_PDF_DIR}/layout-parser-paper-fast.pdf").read_bytes()
-        # fast strategy: the cap is irrelevant and partition succeeds
-        els = pdf_to_elements(raw, strategy="fast", pdf_hi_res_max_pages=1)
-        assert len(els) > 10
+        raws = [fx.make_paged_pdf(12)]
+        paper = Path(f"{REF_PDF_DIR}/layout-parser-paper-fast.pdf")
+        if paper.exists():
+            raws.append(paper.read_bytes())
+        for raw in raws:
+            # fast strategy: the cap is irrelevant and partition succeeds
+            els = pdf_to_elements(raw, strategy="fast", pdf_hi_res_max_pages=1)
+            assert len(els) > 10
 
 
 class TestExtractForms:

@@ -10,6 +10,8 @@ from tests import fixtures as fx
 from unstructured_spark.functions import cleaners
 from unstructured_spark.operators import staging
 
+_INGEST = fx.REFERENCE / "test_unstructured_ingest"
+
 
 @pytest.fixture(scope="module")
 def elements(spark):
@@ -156,6 +158,7 @@ class TestChunkDocTvf:
 
 
 class TestMarkdownExprFacadeParity:
+    @fx.needs(_INGEST / "expected-structured-output")
     def test_native_render_matches_facade_over_golden_corpus(self, spark):
         """render_markdown_expr (native, whole-stage codegen) and
         api.element_to_md (reference-exact, golden-pinned) must agree
@@ -205,6 +208,10 @@ class TestMarkdownExprFacadeParity:
 
 
 class TestHtmlDocumentRenderer:
+    @fx.needs(
+        _INGEST / "expected-structured-output/gcs/nested-1/fake-text.txt.json",
+        _INGEST / "expected-structured-output-html/gcs/nested-1/fake-text.txt.html",
+    )
     def test_distributed_matches_local_renderer(self, spark):
         import json as _json
         from pathlib import Path
