@@ -69,21 +69,22 @@ def main() -> None:
     targets = [os.path.join(REPO, m) for m in args.module]
     mod_names = [m.replace("/", ".").removesuffix(".py") for m in args.module]
 
-    from pyspark.sql import SparkSession
+    # the workers import the repo's package (and the daemon get_spark
+    # selects) whatever the working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+    )
+    from unstructured_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("ab-interleave")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.python.worker.reuse",
-                "false" if args.fresh_workers else "true")
-        .getOrCreate()
+    # the library's own session, so the arms run on the workers it runs
+    spark = get_spark(
+        app_name="ab-interleave",
+        extra_conf={
+            "spark.driver.memory": "16g",
+            "spark.python.worker.reuse": "false" if args.fresh_workers else "true",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     registry = entry_mod.queries()

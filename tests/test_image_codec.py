@@ -96,6 +96,22 @@ class TestBmp:
         assert c == 3 and len(px) == w * h * 3
 
 
+class TestTiffProbe:
+    def test_probe_reads_first_ifd_size(self):
+        meta = probe_bytes(make_tiff([(60, 40), (30, 70)]))
+        assert (meta["format"], meta["width"], meta["height"]) == ("tiff", 60, 40)
+
+    def test_big_endian_magic_is_sniffed(self):
+        # an IFD offset past the end: format known, no size, no raise
+        meta = probe_bytes(b"MM\x00*\x00\x00\xff\xff" + bytes(8))
+        assert (meta["format"], meta["width"], meta["height"]) == ("tiff", None, None)
+
+    def test_truncated_ifd_keeps_row(self):
+        raw = make_tiff([(60, 40)])
+        meta = probe_bytes(raw[: len(raw) - 20])
+        assert meta["format"] == "tiff" and meta["width"] is None
+
+
 class TestGif:
     def test_tiny_gif_pixels(self):
         data = _tiny_gif([0, 1, 2, 3], 2, 2)

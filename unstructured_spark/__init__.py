@@ -16,10 +16,14 @@ Layout:
 
 __version__ = "0.1.0"
 
-from unstructured_spark.session import get_spark  # noqa: F401
-
 
 def __getattr__(name):
+    # no pyspark import on package import: worker_daemon runs under this
+    # package and must drop Spark's archives before pyspark loads
+    if name == "get_spark":
+        from unstructured_spark.session import get_spark
+
+        return get_spark
     # lazy drop-in surface: `from unstructured_spark import partition`
     # (local single-document facade, api.py) without importing the
     # facade on package import

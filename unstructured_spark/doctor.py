@@ -187,13 +187,17 @@ def _optional_import_rows() -> list[tuple[str, str, str]]:
 
 
 def build_report() -> str:
-    """Full diagnostics: engine, registered agents, optional imports,
-    per-format readiness, and the on-demand UDF profiler switch."""
+    """Full diagnostics: engine, the Python workers' daemon, registered
+    agents, optional imports, per-format readiness, and the on-demand
+    UDF profiler switch."""
     lines = ["unstructured_spark capability report", ""]
     try:
         import pyspark
 
+        from unstructured_spark.session import worker_daemon
+
         lines.append(f"pyspark: {pyspark.__version__}")
+        lines.append(f"python workers: {worker_daemon()}")
     except ImportError:
         lines.append("pyspark: MISSING")
     lines.append(f"python: {sys.version.split()[0]}")

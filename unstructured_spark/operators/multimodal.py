@@ -7,7 +7,7 @@ Design: media stays an opaque ``binary`` column; every operator is
 per executor. What ships here:
 
 - :func:`probe_media` — REAL container sniffing: dimensions from
-  PNG/JPEG/GIF/BMP headers, duration/rate from WAV headers, all stdlib
+  PNG/JPEG/GIF/BMP/TIFF headers, duration/rate from WAV headers, all stdlib
   byte parsing (no PIL/ffmpeg needed).
 - :func:`decode_image_features` — REAL pixel decode for PNG/BMP/GIF/
   baseline-JPEG via the dependency-free codec
@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from unstructured_spark.parsers.image_codec import _tiff_ifds
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -87,6 +89,11 @@ def _probe_headers(data: bytes, meta: dict) -> dict:
         meta["format"] = "bmp"
         meta["width"], meta["height"] = struct.unpack("<ii", data[18:26])
         meta["height"] = abs(meta["height"])
+    elif data[:4] in (b"II*\x00", b"MM\x00*"):
+        meta["format"] = "tiff"
+        ifd = next(_tiff_ifds(data), {})
+        if 256 in ifd and 257 in ifd:
+            meta["width"], meta["height"] = ifd[256][0], ifd[257][0]
     elif data[:4] == b"RIFF" and data[8:12] == b"WAVE":
         meta["format"] = "wav"
         # fmt chunk: channels@22, rate@24; data size from RIFF length
