@@ -19,6 +19,11 @@ The module file is swapped on disk and importlib.reload-ed between
 visits (registered queries import operators inside their function
 bodies, so the reloaded module object is picked up on the next query
 construction). The file is restored to the B variant at exit.
+
+To A/B a query's own builder or oracle, swap its family module
+(``--module entry_queries/text.py``): reloading it re-registers its
+rows, and the shim is reloaded after it. ``entry_queries/common.py``
+holds the registry itself and cannot be swapped this way.
 """
 
 from __future__ import annotations
@@ -104,13 +109,14 @@ def main() -> None:
 
     def swap(variant_files: list[str]) -> None:
         # refresh the registry after every swap: queries() returns
-        # function objects bound at module-exec time, so swapping
-        # __spark_entry__.py itself (entry-level changes) needs the
-        # entry module reloaded and the registry rebuilt — otherwise
-        # the captured dict keeps serving the pre-swap functions.
+        # the builders that family modules registered when they ran,
+        # so a swapped family module (entry_queries/<family>.py) is
+        # reloaded first, which re-registers its rows, and then the
+        # shim, and the registry is rebuilt — otherwise the captured
+        # dict keeps serving the pre-swap functions.
         # (importlib.reload mutates the module object in place, so
         # module-level `from ... import dedup` style references in the
-        # entry see the swapped operator code either way.)
+        # family modules see the swapped operator code either way.)
         #
         # MULTI-MODULE CAVEAT: non-entry modules reload in CLI order.
         # If swapped module A does `from B import f` on swapped module

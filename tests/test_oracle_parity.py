@@ -15,10 +15,6 @@ import pytest
 import __spark_entry__ as entry_mod
 from tests.conftest import SF_DIR
 
-# long-running suite: deselected from the default fast tier (pytest.ini);
-# runs in the round-end full pass with -m "slow or not slow"
-pytestmark = pytest.mark.slow
-
 TABLES = entry_mod.TABLES
 
 

@@ -12,6 +12,7 @@ from unstructured_spark.operators.serde import (
     elements_to_markdown,
     filter_element_types,
     read_elements_json,
+    write_elements_csv,
     write_elements_json,
 )
 
@@ -126,13 +127,6 @@ class TestCleaners:
         ).collect()[0]["c"]
         assert out == "financial “quote”"
 
-    def test_group_broken_paragraphs(self, spark):
-        df = spark.createDataFrame([("one\ntwo\n\nthree",)], "text string")
-        out = df.select(
-            cleaners.group_broken_paragraphs(F.col("text")).alias("c")
-        ).collect()[0]["c"]
-        assert out == "one two\n\nthree"
-
 
 class TestSerde:
     def test_json_round_trip(self, spark, docs_df, tmp_path):
@@ -145,6 +139,23 @@ class TestSerde:
         assert sorted((r["type"], r["text"]) for r in rt) == sorted(
             (r["type"], r["text"]) for r in orig
         )
+
+    def test_csv_header_and_rows(self, spark, docs_df, tmp_path):
+        els = partition_documents(docs_df.filter(F.col("doc_id") == "doc-text"))
+        path = str(tmp_path / "csv")
+        write_elements_csv(els, path)
+        back = spark.read.options(header="true", multiLine="true").csv(path)
+        assert back.columns == [
+            "type", "text", "element_id", "doc_id", "element_index",
+            "filename", "file_directory", "filetype", "url", "page_number",
+            "parent_id", "category_depth", "text_as_html", "last_modified",
+        ]
+        # one row per element, each element's own values
+        cols = ["element_id", "type", "text", "element_index"]
+        got = sorted(tuple(r[c] for c in cols) for r in back.collect())
+        want = sorted(tuple(str(r[c]) for c in cols) for r in els.collect())
+        assert len(got) > 1
+        assert got == want
 
     def test_filter_element_types(self, spark, docs_df):
         els = partition_documents(docs_df)

@@ -46,6 +46,38 @@ class TestStaging:
         row = staging.stage_for_argilla(elements).collect()[0]
         assert row["metadata"]["type"]
 
+    def test_datasaur_rows(self, elements):
+        out = staging.stage_for_datasaur(elements)
+        assert out.columns == ["text", "entities"]
+        rows = out.collect()
+        assert sorted(r["text"] for r in rows) == sorted(
+            r["text"] for r in elements.collect()
+        )
+        assert all(r["entities"] == [] for r in rows)
+
+    def test_baseplate_nesting(self, elements):
+        out = staging.stage_for_baseplate(elements)
+        assert out.columns == ["data", "metadata"]
+        rows = out.collect()
+        assert set(rows[0]["metadata"].asDict()) == {
+            "element_id", "type", "filename", "page_number"
+        }
+        got = sorted(
+            (r["metadata"]["element_id"], r["metadata"]["type"], r["data"]["text"])
+            for r in rows
+        )
+        want = sorted(
+            (r["element_id"], r["type"], r["text"]) for r in elements.collect()
+        )
+        assert got == want
+
+    def test_label_box_rows(self, elements):
+        out = staging.stage_for_label_box(elements)
+        assert out.columns == ["external_id", "row_data"]
+        got = sorted((r["external_id"], r["row_data"]) for r in out.collect())
+        want = sorted((r["element_id"], r["text"]) for r in elements.collect())
+        assert got == want
+
     def test_transformers_windows(self, spark):
         df = spark.createDataFrame(
             [("d", "e", "x" * 2500)], "doc_id string, element_id string, text string"

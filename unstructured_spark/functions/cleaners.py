@@ -149,17 +149,6 @@ def clean(
     return F.trim(col)
 
 
-def group_broken_paragraphs(col: Column) -> Column:
-    """Re-join hard-wrapped lines, keep blank-line paragraph breaks
-    (core.py:107-180 semantics): single newlines inside a paragraph are
-    joined to one line; blank-line breaks survive.
-    """
-    sentinel = "\x00PARA\x00"
-    c = F.regexp_replace(col, "\\n\\s*\\n", sentinel)
-    c = F.regexp_replace(c, "\\s*\\n\\s*", " ")
-    return F.replace(c, F.lit(sentinel), F.lit("\n\n"))
-
-
 def bytes_string_to_string(col: Column, encoding: str = "utf-8") -> Column:
     """Repair mojibake: reinterpret each codepoint as a raw byte, then
     decode those bytes with ``encoding`` (reference core.py:432-437:

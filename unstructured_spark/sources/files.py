@@ -3,8 +3,8 @@
 
 Batch: ``spark.read.format("binaryFile")`` — distributed scan, one row
 per file, predicate pushdown on path/modificationTime/length.
-Streaming: ``spark.readStream.format("binaryFile")`` — continuous
-ingest of arriving documents (SURVEY §2.10 streaming row).
+Streams of arriving files are read by
+``streaming.pipeline.read_document_stream``.
 
 At 100 TB, prefer the paths-table shape: :func:`paths_table` lists (or
 accepts a manifest of) file paths as a tiny DataFrame, and
@@ -53,22 +53,6 @@ def read_documents(
         reader = reader.option("pathGlobFilter", glob)
     if recursive:
         reader = reader.option("recursiveFileLookup", "true")
-    return _normalize(reader.load(path))
-
-
-def stream_documents(
-    spark: SparkSession,
-    path: str,
-    *,
-    glob: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Structured-Streaming source over arriving files."""
-    reader = spark.readStream.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return _normalize(reader.load(path))
 
 

@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from unstructured_spark.operators.dedup import minhash_signatures  # noqa: F401  (batch twin)
 from unstructured_spark.operators.text_analysis import fingerprint
 
 
