@@ -1,75 +1,32 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the engine's headline queries at
+"""Benchmark harness: times every registered query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS] (default: the host's CPU count) and records
+what each query ran, layer by layer.
 
-Protocol mirrors the reference's harness shape (BASELINE.md: warm-up
-call, then timed runs): one tiny warm-up query to absorb JVM/codegen
-startup, then each query timed end-to-end (plan + execute + collect)
-as the MEDIAN of $BENCH_ITERS (default 3) runs after one untimed
-warm-up run — medians make round-to-round comparisons noise-robust
-(the r4->r6 "regressions" were pure harness variance).
+Protocol: an untimed session warm-up (JVM, parquet footers, three
+representative query shapes, the Python worker pool); then, per query,
+one untimed warm-up run and $BENCH_ITERS (default 3) timed runs. A run
+is end to end: the builder call (planning plus any job it runs
+eagerly) and the sink (a noop write, or a full collect for the queries
+in _COLLECT_FULL). A query's time is the median of its timed runs.
+BENCH_ONLY=q_a,q_b restricts the run to the named queries.
 
-Output contract: the complete per-query JSON is ALWAYS written to
-BENCH_FULL.json next to this script (the driver's stdout tail is
-truncated at ~2000 chars, which silently broke parsing for three
-rounds). The stdout line carries the summary + as many of the slowest
-per-query timings as fit a 1900-char budget, plus a "full" pointer.
+Layer record: timed run i of query q builds under job group
+``bench:<q>:build:<i>`` and sinks under ``bench:<q>:run:<i>``. After the
+query's timed runs, outside the timed region,
+perfbench.spans.collect_group_metrics reads those groups from Spark's
+status store; a read takes longer the fuller the store is (up to about
+a second), so it never runs inside a timing.
 
-Host-variance caveat (measured r9): three same-code uncontended runs
-hours apart spanned 81 -> 92 -> 105 s total (uniform ~25% per-query
-inflation, identical rankings, no stray processes, load < 1) — the
-container's underlying CPU allocation drifts. Compare per-query
-RANKINGS and round-over-round ratios of the SAME run, not absolute
-seconds across rounds.
-
-Round-10 addendum: the drift got WORSE late in the day — four
-same-code full runs spanned 126.6 -> 138.2 -> 160.1 -> 171.4 s
-(load < 0.2 before the last run started), and code untouched since
-round 2 (q_minhash_signatures: 0.85 s in the morning run, 5.1 s in
-the evening run, same commit) inflated ~6x. Absolute totals from a
-single run are NOT comparable across rounds; within-run rankings
-from the EARLIEST (least-throttled) run of a session are the
-meaningful signal. Morning-run rankings for r10: q_semantic_dedup
-3.26 s top (1.05x the #2 query; it was 2.5x the #2 in r9 before the
-pair-salt fix), 135 queries / 126.6 s total.
-
-Round-11 calibration (makes the artifact throttle-proof): the harness
-times q_token_freq — code untouched since round 1 — with the standard
-protocol and scales totals by the ratio to a pinned quiet-host
-reference.
-
-Round-12 refinement (per-query calibration — the r11 two-endpoint
-scheme couldn't attribute a 2.1x intra-run load swing to specific
-queries): the calibration query now runs INTERLEAVED every
-CAL_INTERVAL (default 20) queries. Each query is normalized by the
-MIN of its two bracketing calibration samples (min = the
-least-throttled nearby moment, so normalization never over-corrects),
-emitted per-query as "queries_normalized"; "value_normalized" is
-their sum and "calibration_samples" the full trace (position, sec,
-1-min loadavg).
-
-Round-13 measurement fixes (both mandated by the r12 verdict, item 2;
-declared in OPTIMIZATION_r13.md):
-
-- UNTIMED BURN-IN: the first calibration sample of a session read
-  2-5x high (r12 measured 0.998 s vs 0.261 s ten queries later on
-  identical code) — JIT compilation of the shuffle/codegen machinery
-  outlasts the fixed warm-ups, so every query timed in the first ~20
-  positions absorbed environment cost that belongs to the JVM, not
-  the query. The harness now repeats the two canaries untimed until
-  the scan canary's median stabilizes (consecutive medians within
-  12%, bounded at 6 rounds) BEFORE calibration[0].
-- The stdout JSON's "queries" field now carries the slowest
-  NORMALIZED per-query seconds (the cross-round comparator the
-  per-query calibration exists to produce) instead of raw wall-clock
-  of this run's throttle window; the raw values stay in "value"
-  (raw total), in the best-effort "queries_raw" stdout field, and —
-  complete and untruncated — in BENCH_FULL.json's "queries". The
-  r12 verdict's PERF comparison was poisoned by exactly this: a
-  host-throttle window manufactured a phantom 2x "regression" on
-  code-identical queries because stdout carried raw seconds.
+Output contract: BENCH_FULL.json, next to this script, holds the
+summary and one row per query under "queries": "sec" (the median) and
+"runs", one entry per timed run with build_jobs and build_ms (the
+builder call alone) and jobs, exec_run_ms, exec_cpu_ms, python_gap_ms,
+shuffle_bytes and failed_tasks (builder and sink together). The last
+stdout line is one JSON object: the summary ("value" is the total of
+the medians in seconds) and "queries", the slowest queries' seconds,
+as many as keep the line within 1900 characters.
 """
 
 from __future__ import annotations
@@ -80,6 +37,7 @@ import os
 import statistics
 import sys
 import time
+from dataclasses import asdict
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -87,11 +45,66 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from perfbench.spans import GroupMetrics, collect_group_metrics  # noqa: E402
+
+# queries whose realistic consumption is a full driver-side collect
+_COLLECT_FULL = {"q03_shipping_priority", "q_top_customers"}
+
+
+def time_query(spark: SparkSession, sf_dir: str, name: str, fn, iters: int) -> dict:
+    """One untimed warm-up run, then ``iters`` timed runs of the query
+    ``fn``. Returns its row: the median seconds and each timed run's
+    layer record."""
+    sc = spark.sparkContext
+
+    def run(i: int) -> tuple[float, float]:
+        """Builds and sinks the query once under run ``i``'s job groups;
+        returns (builder seconds, total seconds)."""
+        sc.setJobGroup(f"bench:{name}:build:{i}", name)
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        sc.setJobGroup(f"bench:{name}:run:{i}", name)
+        if name in _COLLECT_FULL:
+            df.collect()
+        else:
+            # noop sink, not count(): count() lets Catalyst prune every
+            # column the cardinality doesn't need, so a map-only query's
+            # expression columns (regex gates, hashes) would be skipped
+            df.write.format("noop").mode("overwrite").save()
+        t2 = time.perf_counter()
+        sc._jsc.clearJobGroup()
+        return t1 - t0, t2 - t0
+
+    run(0)  # warm-up: codegen compile, broadcast build
+    timed = [run(i) for i in range(1, iters + 1)]
+    metrics = collect_group_metrics(
+        sc, {f"bench:{name}:{p}:{i}" for p in ("build", "run") for i in range(1, iters + 1)}
+    )
+    runs = []
+    for i, (build_s, _) in enumerate(timed, 1):
+        build = metrics.get(f"bench:{name}:build:{i}", GroupMetrics())
+        sink = asdict(metrics.get(f"bench:{name}:run:{i}", GroupMetrics()))
+        both = GroupMetrics(**{k: v + sink[k] for k, v in asdict(build).items()})
+        runs.append({
+            "build_jobs": build.jobs,
+            "build_ms": round(build_s * 1e3, 1),
+            "jobs": both.jobs,
+            "exec_run_ms": round(both.exec_run_ms, 1),
+            "exec_cpu_ms": round(both.exec_cpu_ms, 1),
+            # run time is whole milliseconds per task and CPU time
+            # nanoseconds, so a JVM-only run can read a fraction of a
+            # millisecond per task below zero; no time was spent there
+            "python_gap_ms": round(max(0.0, both.python_gap_ms), 1),
+            "shuffle_bytes": both.shuffle_bytes,
+            "failed_tasks": both.failed_tasks,
+        })
+    return {"sec": round(statistics.median(t for _, t in timed), 3), "runs": runs}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     spark = (
@@ -113,8 +126,8 @@ def main() -> None:
     # process-level JIT warm-up: run three representative query shapes
     # (multi-join agg, window chain, text/array codegen) untimed so the
     # first timed queries don't absorb one-off JIT compilation of the
-    # shuffle/join/window machinery. Per-query warm-up below still
-    # covers plan-specific codegen + broadcast builds.
+    # shuffle/join/window machinery. Per-query warm-up runs still
+    # cover plan-specific codegen + broadcast builds.
     all_q = entry_mod.queries()
     for wname in ("q05_region_revenue", "q_events_moving_avg", "q_gopher_quality"):
         if wname in all_q:
@@ -122,8 +135,7 @@ def main() -> None:
     # Python-worker warm-up: pre-fork the worker pool and pay the
     # numpy/pandas import once per worker BEFORE any timed query —
     # otherwise the first mapInPandas query in registry order absorbs
-    # 32 × interpreter+import startup (~2s) that belongs to the
-    # environment, not the query.
+    # the interpreter+import startup of every worker.
     import pandas as _pd
 
     def _warm(batches):
@@ -134,221 +146,49 @@ def main() -> None:
     spark.range(0, 256, 1, 64).mapInPandas(_warm, "n long").count()
 
     iters = int(os.environ.get("BENCH_ITERS", "3"))
-
-    def _time_query(name: str, fn) -> tuple[float, int]:
-        """One untimed warm-up run, then the median of ``iters`` timed
-        end-to-end runs (plan + execute + noop sink / collect)."""
-        def run() -> int:
-            df = fn(spark, sf_dir)
-            if name in _COLLECT_FULL:
-                return len(df.collect())
-            # noop sink, not count(): count() lets Catalyst prune every
-            # column the cardinality doesn't need, so a map-only query's
-            # expensive expression columns (regex gates, hashes) were
-            # silently skipped — the r9 harness change that made
-            # expression-heavy map-only rows HONEST (and slower on
-            # paper); numbers are not comparable to r8 for those rows
-            df.write.format("noop").mode("overwrite").save()
-            return 0
-
-        n = run()  # warm-up: codegen compile, broadcast build
-        samples = []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            run()
-            samples.append(time.perf_counter() - t0)
-        return statistics.median(samples), n
-
-    # ---- host calibration (r10 post-mortem: same-code per-query times
-    # drifted up to 6x through the day as the container's CPU
-    # allocation throttled; absolute totals from one run were not
-    # comparable across rounds). q_token_freq — untouched since round
-    # 1, pure JVM scan+agg — is timed FIRST with the standard protocol;
-    # its ratio to the pinned quiet-host reference scales the total
-    # into "value_normalized", and loadavg snapshots ambient load.
-    cal_interval = int(os.environ.get("CAL_INTERVAL", "20"))
-    cal_fn = entry_mod.queries()[_CAL_QUERY]
-    cal2_fn = entry_mod.queries().get(_CAL2_QUERY)
-    # calibration trace: (queries-timed-so-far, cal_sec, load1)
-    cal_samples: list[tuple[int, float, float]] = []
-    # second, SHUFFLE-SHAPED canary (r12): the scan-shaped primary
-    # missed a throttle mode that inflated multi-stage join queries
-    # 5-8x while scans ran near-normal. Trace-only — normalization
-    # stays on the conservative scan canary — but the pair lets a
-    # reader attribute an outlier cell to host state: if cal2 spikes
-    # while cal doesn't, the slowdown is in shuffle/alloc paths, not
-    # the query's own code.
-    cal2_samples: list[tuple[int, float]] = []
-
-    # ---- untimed burn-in (r13): run the canary pair with the full
-    # timing protocol but DISCARD the numbers, until the scan canary
-    # stabilizes — the first timed query then starts outside the JIT
-    # window instead of absorbing one-off shuffle/codegen compilation.
-    prev_burn: float | None = None
-    for burn_round in range(int(os.environ.get("BENCH_BURNIN_MAX", "6"))):
-        burn_med, _ = _time_query(_CAL_QUERY, cal_fn)
-        if cal2_fn is not None:
-            _time_query(_CAL2_QUERY, cal2_fn)
-        print(
-            f"# burn-in[{burn_round}] {_CAL_QUERY}: {burn_med:.3f}s",
-            file=sys.stderr,
-        )
-        if prev_burn is not None and abs(burn_med - prev_burn) <= 0.12 * prev_burn:
-            break
-        prev_burn = burn_med
-
-    def _calibrate(at: int) -> None:
-        med, _ = _time_query(_CAL_QUERY, cal_fn)
-        load1 = round(os.getloadavg()[0], 2)
-        cal_samples.append((at, round(med, 3), load1))
-        line = (
-            f"# calibration[{at}] {_CAL_QUERY}: {med:.3f}s"
-            f" (reference {_CAL_REFERENCE_SEC}s, load1 {load1})"
-        )
-        if cal2_fn is not None:
-            med2, _ = _time_query(_CAL2_QUERY, cal2_fn)
-            cal2_samples.append((at, round(med2, 3)))
-            line += f"; {_CAL2_QUERY}: {med2:.3f}s"
-        print(line, file=sys.stderr)
-
-    _calibrate(0)
-    cal_sec = cal_samples[0][1]
-    load_avg = [round(x, 2) for x in os.getloadavg()]
-    # BENCH_ONLY=q_a,q_b restricts the run to the named queries — the
-    # bench-gate workflow (SCALING.md: any commit touching an operator
-    # behind a top-10-slowest query re-benches that query and pastes
-    # before/after in the commit message) needs a targeted mode that
-    # doesn't pay the full 134-query sweep.
     only = os.environ.get("BENCH_ONLY")
     if only:
         wanted = {q.strip() for q in only.split(",") if q.strip()}
         all_q = {k: v for k, v in all_q.items() if k in wanted}
-    timings: dict[str, float] = {}
-    # position of each query in the sweep, for bracketing calibration
-    positions: dict[str, int] = {}
-    total = 0.0
+    rows: dict[str, dict] = {}
     for name, fn in all_q.items():
-        if timings and len(timings) % cal_interval == 0:
-            _calibrate(len(timings))
-        positions[name] = len(timings)
-        dt, n = _time_query(name, fn)
-        timings[name] = round(dt, 3)
-        total += dt
-        # noop-sink queries return n=0 by construction — logging
-        # "(0 rows)" there would read as an empty result; label the
-        # sink instead and keep real counts only for collect queries
-        rows = f"{n} rows" if name in _COLLECT_FULL else "noop sink"
-        print(f"# {name}: {dt:.3f}s median of {iters} ({rows})", file=sys.stderr)
+        rows[name] = time_query(spark, sf_dir, name, fn, iters)
+        print(f"# {name}: {rows[name]['sec']:.3f}s median of {iters}", file=sys.stderr)
         # drop per-run DataFrame refs NOW: queries that localCheckpoint
         # (kmeans, dedup, bigram LM) leave checkpoint RDD blocks pinned
-        # until Python GC releases the py4j handles — across 106×4 runs
+        # until Python GC releases the py4j handles — across the sweep
         # that accumulates into executor memory pressure that inflates
         # every later query. Collect + JVM ContextCleaner keeps the
         # session flat.
         gc.collect()
 
-    # closing calibration sample, then per-query normalization: each
-    # query scales by reference / min(bracketing samples) — the min is
-    # the least-throttled nearby moment, so a load spike that hit the
-    # calibration but not the query never over-corrects, while a
-    # sustained throttle (both brackets slow) is fully compensated.
-    _calibrate(len(timings))
-    cal_end = cal_samples[-1][1]
-
-    def _bracket_min(pos: int) -> float:
-        prev = max(a for a, _, _ in cal_samples if a <= pos)
-        nxt = min((a for a, _, _ in cal_samples if a > pos),
-                  default=prev)
-        by_at = {a: s for a, s, _ in cal_samples}
-        return min(by_at[prev], by_at[nxt])
-
-    queries_norm = {
-        name: round(t * _CAL_REFERENCE_SEC
-                    / max(_bracket_min(positions[name]), 1e-9), 3)
-        for name, t in timings.items()
-    }
-    total_norm = round(sum(queries_norm.values()), 3)
     record = {
         "metric": "headline_queries_total_wall_clock",
-        "value": round(total, 3),
-        # sum of per-query normalized times: what this run WOULD read
-        # on the pinned r9 quiet-host baseline. Compare
-        # value_normalized / queries_normalized across rounds, value
-        # only within a run.
-        "value_normalized": total_norm,
-        "calibration_query": _CAL_QUERY,
-        "calibration_sec": cal_sec,
-        "calibration_end_sec": cal_end,
-        "calibration_reference_sec": _CAL_REFERENCE_SEC,
-        "calibration_samples": [
-            {"at": a, "sec": s, "load1": l} for a, s, l in cal_samples
-        ],
-        "calibration2_query": _CAL2_QUERY,
-        "calibration2_samples": [
-            {"at": a, "sec": s} for a, s in cal2_samples
-        ],
-        "loadavg": load_avg,
+        "value": round(sum(r["sec"] for r in rows.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "queries_normalized": queries_norm,
         "sf": sf,
         "cpus": int(cpus),
         "iters": iters,
-        "n_queries": len(timings),
+        "n_queries": len(rows),
+        "queries": rows,
     }
     # the full record always lands on disk — never truncated
-    full_path = os.path.join(REPO, "BENCH_FULL.json")
-    with open(full_path, "w") as f:
+    with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
         json.dump(record, f, separators=(",", ":"))
 
-    # stdout line: summary + slowest-first per-query timings packed
-    # into a 1900-char budget (the driver keeps only a ~2000-char tail).
-    # r13: "queries" carries NORMALIZED seconds (the throttle-proof
-    # cross-round comparator); as many of the slowest RAW values as
-    # still fit ride in "queries_raw"; the complete raw map is always
-    # in BENCH_FULL.json.
-    head = {k: record[k] for k in
-            ("metric", "value", "value_normalized", "calibration_sec",
-             "loadavg", "unit", "sf", "cpus", "iters", "n_queries")}
+    # stdout line: the summary plus slowest-first seconds packed into a
+    # 1900-char budget (a reader may keep only a ~2000-char tail)
+    head = {k: v for k, v in record.items() if k != "queries"}
     head["full"] = "BENCH_FULL.json"
-    head["queries_unit"] = "sec_normalized"
     shown: dict[str, float] = {}
-    for name, t in sorted(queries_norm.items(), key=lambda kv: -kv[1]):
-        trial = dict(head)
-        trial["queries"] = {**shown, name: t}
-        if len(json.dumps(trial, separators=(",", ":"))) > 1600:
-            break
-        shown[name] = t
-    head["queries"] = shown
-    shown_raw: dict[str, float] = {}
-    for name, t in sorted(timings.items(), key=lambda kv: -kv[1]):
-        trial = dict(head)
-        trial["queries_raw"] = {**shown_raw, name: t}
+    for name, row in sorted(rows.items(), key=lambda kv: -kv[1]["sec"]):
+        trial = {**head, "queries": {**shown, name: row["sec"]}}
         if len(json.dumps(trial, separators=(",", ":"))) > 1900:
             break
-        shown_raw[name] = t
-    head["queries_raw"] = shown_raw
+        shown[name] = row["sec"]
+    head["queries"] = shown
     print(json.dumps(head, separators=(",", ":")))
     spark.stop()
-
-
-# queries whose realistic consumption is a full driver-side collect
-_COLLECT_FULL = {"q03_shipping_priority", "q_top_customers"}
-
-# Host-throttle calibration: q_token_freq is a pure JVM scan+agg whose
-# code has not changed since round 1, timed with the same
-# warm-up+median protocol as every other query. The reference value is
-# its r9 full-bench median on a quiet host (BENCH_FULL.json at commit
-# 3053866: 0.147 s; the r10 morning run read 0.152 s, the throttled
-# r10 evening run 0.265 s — a 1.8x calibration ratio that explains the
-# apparent evening "regressions" on untouched code).
-_CAL_QUERY = "q_token_freq"
-_CAL_REFERENCE_SEC = 0.147
-
-# Shuffle-shaped canary: q08_market_share (8-table TPC-H join chain,
-# untouched since round 2; r11 quiet-host median 0.95 s). Trace-only —
-# see the _calibrate docnote.
-_CAL2_QUERY = "q08_market_share"
 
 
 if __name__ == "__main__":

@@ -23,7 +23,7 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.appName("corpus-e2e-demo")
         .master(f"local[{cpus}]")
@@ -98,7 +98,7 @@ def main_streaming() -> None:
     import tempfile
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     n_files = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", "200"))
     spark = (
         SparkSession.builder.appName("corpus-e2e-stream-demo")
@@ -200,7 +200,7 @@ def main_governance() -> None:
     each fraction dropped"), the v1→v2 snapshot diff (what moved), and
     the per-source datasheet. One JSON line."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.appName("corpus-governance-demo")
         .master(f"local[{cpus}]")
@@ -275,7 +275,7 @@ def main_release() -> None:
     import tempfile
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     spark = (
         SparkSession.builder.appName("corpus-release-demo")
         .master(f"local[{cpus}]")

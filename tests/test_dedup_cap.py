@@ -1051,8 +1051,8 @@ class TestDedupWithinDoc:
         assert out[0]["text"] == "\n\n".join(
             f"para {i}" for i in range(37)
         )
-        # generous bound: this host throttles same-code timings up to
-        # 6x (bench.py header) — the quadratic path would take tens of
+        # generous bound: same-code timings have drifted up to 6x
+        # between bench runs — the quadratic path would take tens of
         # minutes, so 300s still separates the two regimes cleanly
         assert elapsed < 300, f"giant doc took {elapsed:.1f}s"
 

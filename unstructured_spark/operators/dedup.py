@@ -37,6 +37,12 @@ def token_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
+def fingerprint(col: Column) -> Column:
+    """Deterministic document fingerprint: md5 of
+    whitespace/case-normalized text. Exact-dup key."""
+    return F.md5(F.lower(F.trim(F.regexp_replace(col, "\\s+", " "))))
+
+
 def ngrams_from_tokens(toks: Column, n: int, sep: str) -> Column:
     """Every n-token window of a token-array column, each joined with
     ``sep``, in position order (repeats kept). Linear in the token
@@ -255,7 +261,7 @@ def exact_duplicates(
 ) -> DataFrame:
     """Exact dedup groups: normalized-text md5 → (fingerprint, keep_id,
     dup_count). ``keep_id`` = min doc id (the canonical survivor)."""
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))))
+    fp = fingerprint(F.col(text))
     return (
         df.select(F.col(doc_id).alias("doc"), fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -291,15 +297,7 @@ def soft_dedup_weights(
     single build row instead of buffering and sorting the whole group
     the way a count window over the same partitioning would.
     """
-    fp = F.md5(
-        F.lower(
-            F.trim(
-                F.regexp_replace(
-                    F.coalesce(F.col(text), F.lit("")), "\\s+", " "
-                )
-            )
-        )
-    )
+    fp = fingerprint(F.coalesce(F.col(text), F.lit("")))
     keyed = df.select(F.col(doc_id), fp.alias("_fp"))
     counts = keyed.groupBy("_fp").agg(
         F.count("*").cast("bigint").alias("dup_count")
@@ -820,7 +818,7 @@ def drop_near_duplicates(
     checkpoint = df.localCheckpoint(eager=True)
     narrow = checkpoint.select(doc_id, text, *q_cols)
     # exact groups: every doc whose group representative is another doc
-    fp = F.md5(F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))))
+    fp = fingerprint(F.col(text))
     if keep == "min_id":
         fps = narrow.select(F.col(doc_id).alias("doc"), fp.alias("fingerprint"))
         exact_keep = exact_duplicates(narrow, text=text, doc_id=doc_id).select(
@@ -1352,8 +1350,6 @@ def fingerprint_index(
     :func:`minhash_band_index` covering what signatures can't (docs too
     short to shingle) and what they needn't (bit-identical copies).
     One row per doc; append survivors' rows after each batch."""
-    from unstructured_spark.operators.text_analysis import fingerprint
-
     return df.select(
         fingerprint(F.col(text)).alias("fingerprint"),
         F.col(doc_id).alias("doc_id"),
@@ -1395,8 +1391,6 @@ def exact_dedup_against_index(
     have a NULL fingerprint and pass through untouched — same contract
     as :func:`drop_near_duplicates` and :func:`dedup_against_index`.
     Returns the surviving new-batch rows."""
-    from unstructured_spark.operators.text_analysis import fingerprint
-
     fp = fingerprint(F.col(text))
     staged = new_docs.withColumn("_nfp", fp)
     survivors = staged.join(
@@ -1465,8 +1459,6 @@ def bloom_fingerprint_index(
     NULL-text docs contribute no bits (NULL fingerprint — same
     exemption as the exact index).
     """
-    from unstructured_spark.operators.text_analysis import fingerprint
-
     pos = (
         df.select(fingerprint(F.col(text)).alias("_fp"))
         .filter(F.col("_fp").isNotNull())
@@ -1527,8 +1519,6 @@ def bloom_probe_new(
     groupBy(doc) — the batch is shuffled once on its own doc ids,
     history never.
     """
-    from unstructured_spark.operators.text_analysis import fingerprint
-
     staged = new_docs.select(
         F.col(doc_id).alias("doc"), fingerprint(F.col(text)).alias("_fp")
     )
@@ -1678,10 +1668,7 @@ def remove_boilerplate_lines(
     lines = src.select(
         F.col(doc_id).alias("doc"),
         F.posexplode(F.split(F.col(text), "\n")).alias("pos", "line"),
-    ).withColumn(
-        "_fp",
-        F.md5(F.lower(F.trim(F.regexp_replace(F.col("line"), "\\s+", " ")))),
-    )
+    ).withColumn("_fp", fingerprint(F.col("line")))
     # blank = empty under the SAME normalization as the fingerprint —
     # F.trim alone strips only spaces, so a CRLF corpus's "\r" lines
     # would otherwise count as content, put md5("") into the frequent
@@ -1787,10 +1774,7 @@ def dedup_paragraphs(
     paras = src.select(
         F.col(doc_id).alias("doc"),
         F.posexplode(F.split(F.col(text), sep_re)).alias("pos", "para"),
-    ).withColumn(
-        "_fp",
-        F.md5(F.lower(F.trim(F.regexp_replace(F.col("para"), "\\s+", " ")))),
-    )
+    ).withColumn("_fp", fingerprint(F.col("para")))
     norm_nonempty = (
         F.trim(F.regexp_replace(F.col("para"), "\\s+", " ")) != ""
     )

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from unstructured_spark.operators.dedup import (
     _gram_hashes,
+    fingerprint,
     ngrams_from_tokens,
     shingles_from_tokens,
     token_hash,
@@ -251,12 +252,6 @@ def quality_q_sql(text: str = "text") -> str:
         " lower(w))))) // len(t), 1000000)"
         " + (1000000::bigint * len(list_distinct(t))) // len(t) end"
     )
-
-
-def fingerprint(col: Column) -> Column:
-    """Deterministic document fingerprint: md5 of
-    whitespace/case-normalized text. Exact-dup key."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(col, "\\s+", " "))))
 
 
 def doc_stats(df: DataFrame, text: str = "text", doc_id: str = "doc_id") -> DataFrame:
