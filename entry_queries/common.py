@@ -45,22 +45,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Scale-adaptive rebalance for a compute-heavy map stage above a
-    small-fixture scan: the bench parquet files are single-row-group
-    (one split), so scan-stage work — filters, projections, partial
-    aggregation, per-row expression trees — runs on ONE core while the
-    rest of local[32] idles. When the physical scan yields fewer splits
-    than the cluster's parallelism, round-robin repartition; at real
-    corpus scale the scan has >= cores splits and this is an identity
-    (no exchange enters the plan). Same discipline as
-    dedup.minhash_signatures / operators.main_content."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
-        return df
-    return df.repartition(sc.defaultParallelism)
-
-
 class Query(NamedTuple):
     """One registered query: the Spark builder and the DuckDB SQL that
     must return the same rows over the same tables."""

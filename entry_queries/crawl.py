@@ -7,7 +7,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entry_queries.common import _spread, _t, query
+from entry_queries.common import _t, query
+from unstructured_spark.operators.storage import spread
 
 
 # round trip is the identity over documents: any framing or
@@ -310,16 +311,15 @@ def q_main_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (ancestor hints / 100% link density), content blocks
     classify by integer lengths + the two smoothing window rules.
     Scale shape: synthesis, parse and per-doc rollup all happen in one
-    projection + one mapInPandas; the leading _spread is a
-    SMALL-FIXTURE rebalance only (the sf parquet is one input split,
-    which serialized the whole Python classify stage onto one core —
-    measured 2.5s -> 0.35s; a real corpus arrives in many splits, the
-    rebalance skips itself, and no shuffle remains anywhere)."""
+    projection + one mapInPandas; the leading ``spread`` matters at
+    small scale only (the sf parquet is one input split, which
+    serialized the whole Python classify stage onto one core —
+    measured 2.5s -> 0.35s)."""
     from unstructured_spark.operators.main_content import (
         extract_main_content,
     )
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     return extract_main_content(_synth_crawl_pages(docs))
 
 
@@ -513,15 +513,14 @@ def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     attr (doc_id%3: en / de / absent) — and run the head-only parser
     (parsers/page_meta.py via operators/main_content.py). The
     canonical URL is the key dedup_by_url collapses syndicated copies
-    on; noindex is the C4/RefinedWeb drop flag. Map-only after a
-    scale-adaptive small-fixture rebalance (_spread: an identity at
-    real corpus scan widths); head-only parse bounds per-row cost by
-    head size. Oracle replays the synthesis field-for-field."""
+    on; noindex is the C4/RefinedWeb drop flag. Map-only after
+    ``spread``; head-only parse bounds per-row cost by head size.
+    Oracle replays the synthesis field-for-field."""
     from unstructured_spark.operators.main_content import (
         extract_page_metadata,
     )
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     pages = docs.select(
         "doc_id",
         F.filter(

@@ -19,12 +19,12 @@ from entry_queries.common import (
     _P_SSN,
     _QUALITY_NTOK_BASE_SQL,
     _VERIFIED_LABELS_CTE,
-    _spread,
     _t,
     query,
 )
 from unstructured_spark.operators import dedup, text_analysis
 from unstructured_spark.operators.sketches import hll_alpha_q20
+from unstructured_spark.operators.storage import spread
 from unstructured_spark.operators.text_analysis import (
     fxln_int,
     fxln_select_sql,
@@ -1569,7 +1569,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     window."""
     from unstructured_spark.operators.sampling import curriculum_order
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
+    docs = spread(_t(spark, sf_dir, "documents"))
     banded = text_analysis.with_quality_q(docs).select(
         "doc_id",
         F.expr("quality_q div 1000000").cast("bigint").alias("band"),

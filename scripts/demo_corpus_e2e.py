@@ -18,21 +18,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from unstructured_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    spark = (
-        SparkSession.builder.appName("corpus-e2e-demo")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="corpus-e2e-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     from unstructured_spark.pipelines import pretraining_corpus_e2e
@@ -70,7 +63,7 @@ def main() -> None:
                 "value": round(wall, 2),
                 "unit": "sec",
                 "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
-                "cpus": int(cpus),
+                "cpus": spark.sparkContext.defaultParallelism,
                 "documents": n_docs,
                 "packed_placements": n_packed,
                 "splits": split_counts,
@@ -98,16 +91,8 @@ def main_streaming() -> None:
     import tempfile
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     n_files = int(os.environ.get("SPARK_GRAFT_STREAM_DOCS", "200"))
-    spark = (
-        SparkSession.builder.appName("corpus-e2e-stream-demo")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="corpus-e2e-stream-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     from unstructured_spark.operators.classifier import nb_train
@@ -200,15 +185,7 @@ def main_governance() -> None:
     each fraction dropped"), the v1→v2 snapshot diff (what moved), and
     the per-source datasheet. One JSON line."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    spark = (
-        SparkSession.builder.appName("corpus-governance-demo")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="corpus-governance-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     from unstructured_spark.operators.storage import corpus_diff_summary
@@ -275,16 +252,7 @@ def main_release() -> None:
     import tempfile
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
-    spark = (
-        SparkSession.builder.appName("corpus-release-demo")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="corpus-release-demo")
     spark.sparkContext.setLogLevel("ERROR")
 
     from unstructured_spark.pipelines import release_corpus

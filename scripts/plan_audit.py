@@ -39,10 +39,9 @@ PATTERNS = {
     "xch_hash": re.compile(r"Exchange hashpartitioning"),
     "xch_range": re.compile(r"Exchange rangepartitioning"),
     "xch_single": re.compile(r"Exchange SinglePartition"),
-    # the r12 scale-adaptive rebalances (_spread / minhash / simhash /
-    # NB features / main_content): present ONLY at small-fixture split
-    # counts — at real scan parallelism the operators skip the
-    # repartition and no such exchange enters the plan
+    # storage.spread, the small-input rebalance: present ONLY at
+    # small-fixture split counts — at real scan parallelism it is an
+    # identity and no such exchange enters the plan
     "xch_rr": re.compile(r"Exchange RoundRobinPartitioning"),
     # 'Sort [' matches both bare and codegen-annotated ('*(2) Sort [')
     # plan lines without catching SortMergeJoin/SortAggregate
@@ -111,13 +110,11 @@ def main() -> None:
         f" (hash {totals['xch_hash']}, range {totals['xch_range']},"
         f" single-partition {totals['xch_single']},"
         f" round-robin {totals['xch_rr']})",
-        "- round-robin exchanges are the scale-ADAPTIVE small-fixture",
-        "  rebalances (r12 optimization: _spread / minhash_signatures /",
-        "  simhash_pairs / shared_ngram_spans / NB _doc_buckets /",
-        "  main_content / od_map buckets): they repartition only when the",
-        "  physical scan yields fewer splits than defaultParallelism, so",
-        "  at real corpus widths they are identities and this count is 0",
-        "  (pinned by tests/test_scan_spread.py).",
+        "- round-robin exchanges are `storage.spread`, the small-input",
+        "  rebalance: it repartitions only when the plan's partition",
+        "  count is known and below defaultParallelism, so at real corpus",
+        "  widths it is an identity and this count is 0 (pinned by",
+        "  tests/test_scan_spread.py).",
         f"- row-at-a-time Python (`BatchEvalPython`): **{totals['row_py']}**"
         " (must be 0)",
         f"- `CartesianProduct`: **{totals['cartesian']}** (must be 0;"

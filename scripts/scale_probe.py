@@ -119,19 +119,14 @@ def main() -> None:
     if args.fresh and os.path.exists(WORK):
         shutil.rmtree(WORK)
 
-    from pyspark.sql import SparkSession
+    from unstructured_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-probe")
-        .config("spark.sql.shuffle.partitions", args.partitions or cpus)
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="scale-probe",
+        shuffle_partitions=args.partitions and int(args.partitions),
+        extra_conf={"spark.driver.memory": "48g"},
     )
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    cpus = str(spark.sparkContext.defaultParallelism)
 
     import __spark_entry__ as entry_mod
 

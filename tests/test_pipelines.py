@@ -196,6 +196,13 @@ class TestPretrainingCorpusE2E:
         docs = spark.createDataFrame(
             rows, "doc_id long, content binary, path string"
         )
+        seen = spark.sparkContext.accumulator(0)
+
+        def count_row(content):
+            seen.add(1)
+            return content
+
+        docs = docs.withColumn("content", F.udf(count_row, "binary")("content"))
         packed, splits = pretraining_corpus_e2e(docs, pack_tokens=64)
         srows = splits.collect()
         assert srows, "no chunks survived the chain"
@@ -216,6 +223,9 @@ class TestPretrainingCorpusE2E:
             assert prows
             seq0 = [r for r in prows if r["seq_id"] == min(p["seq_id"] for p in prows)]
             assert any(r["seq_token_start"] == 0 for r in seq0)
+        # the partition/chunk/hygiene tree ran once per document, over
+        # the build and both actions
+        assert seen.value == len(rows)
 
     def test_classifier_gate_filters_predicted_class(self, spark):
         from unstructured_spark.pipelines import pretraining_corpus_e2e

@@ -1,13 +1,20 @@
-"""Pins for the r12 scale-adaptive scan rebalance (optimization round).
+"""Pins for ``storage.spread``, the one small-input rebalance rule.
 
-Operators that spread a single-split scan before compute-heavy map
-stages (dedup.simhash_pairs, dedup.shared_ngram_spans,
-classifier._doc_buckets) must:
+Its callers: dedup.minhash_signatures, dedup.simhash_pairs,
+dedup.ngram_jaccard_pairs, dedup.shared_ngram_spans,
+text_analysis.winnow_fingerprints, classifier._doc_buckets,
+similarity.cosine_topk, partition_auto._size_parse_tasks and the
+q_main_content, q_page_metadata and q_curriculum_order builders;
+od_map.match_detections sizes its buckets from
+``storage.planned_partitions``. They must:
 
 1. be an IDENTITY — no RoundRobinPartitioning exchange — when the
-   input already parallelizes (the 100 TB case), and
+   input already parallelizes (the 100 TB case),
 2. produce bit-identical results whether the input arrives as one
-   split or many (the rebalance must not leak into any result).
+   split or many (the rebalance must not leak into any result), and
+3. run no Spark job to decide: an input with an adaptive plan (an
+   exchange, an aggregate, a join under AQE), or a stream, keeps its
+   partitioning.
 
 ``partition_documents`` also sizes its parse tasks by input bytes: many
 small-file splits coalesce, with no shuffle, to two tasks per core, and
@@ -16,14 +23,17 @@ a scan whose bytes need more tasks keeps its splits.
 
 import contextlib
 import os
+import pathlib
 import sys
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from unstructured_spark.operators import dedup  # noqa: E402
+from unstructured_spark.operators import dedup, similarity, text_analysis  # noqa: E402
 from unstructured_spark.operators.classifier import nb_classify  # noqa: E402
+from unstructured_spark.operators.storage import planned_partitions, spread  # noqa: E402
 from unstructured_spark.schema import ELEMENT_COLUMNS  # noqa: E402
 
 
@@ -75,6 +85,90 @@ def test_nb_classify_results_identical_across_input_splits(spark):
             seed_in_corpus=True,
         )
     assert _rows(run(1)) == _rows(run(8))
+
+
+def test_winnow_results_identical_across_input_splits(spark):
+    one = text_analysis.winnow_fingerprints(_docs(spark, 1), k=3, window=4)
+    many = text_analysis.winnow_fingerprints(_docs(spark, 8), k=3, window=4)
+    assert _rows(one) == _rows(many)
+
+
+def _vectors(spark, n_parts):
+    base = spark.range(0, 60).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            *[((F.col("id") * (j + 3)) % 11 - 5).cast("double") for j in range(6)]
+        ).alias("embedding"),
+    )
+    return base.coalesce(1) if n_parts == 1 else base.repartition(n_parts)
+
+
+def test_cosine_topk_results_identical_across_input_splits(spark):
+    def run(n_parts):
+        corpus = _vectors(spark, n_parts)
+        return similarity.cosine_topk(corpus, corpus.filter("vec_id % 7 = 0"), k=5)
+
+    assert _rows(run(1)) == _rows(run(8))
+
+
+# --- deciding from the plan, without a job --------------------------------
+
+
+def _jobs_in(spark, group, build):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status store is fed by an asynchronous listener
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_grouped_input_starts_no_job(spark):
+    """Over an input that ends in an exchange (an AdaptiveSparkPlan) the
+    partition count is unknown until run; the builders keep its
+    partitioning rather than run its stages to count them."""
+    docs = _docs(spark, 8).groupBy("doc_id").agg(F.first("text").alias("text"))
+    assert planned_partitions(docs) is None
+    sigs, jobs = _jobs_in(
+        spark, "spread-minhash", lambda: dedup.minhash_signatures(docs)
+    )
+    assert jobs == 0
+    assert _rows(sigs) == _rows(dedup.minhash_signatures(_docs(spark, 1)))
+
+    corpus = _vectors(spark, 8).groupBy("vec_id").agg(
+        F.first("embedding").alias("embedding")
+    )
+    top, jobs = _jobs_in(
+        spark, "spread-cosine", lambda: similarity.cosine_topk(corpus, corpus, k=3)
+    )
+    assert jobs == 0
+    assert _rows(top) == _rows(similarity.cosine_topk(_vectors(spark, 1), corpus, k=3))
+
+
+def test_spread_repartitions_only_a_known_narrow_input(spark):
+    p = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 120, numPartitions=p)
+    assert spread(wide) is wide
+    narrow = spread(wide.coalesce(1))
+    assert "RoundRobinPartitioning" in narrow._jdf.queryExecution().sparkPlan().toString()
+    stream = spark.readStream.format("rate").load()
+    assert planned_partitions(stream) is None
+    assert spread(stream) is stream
+
+
+def test_partition_count_read_only_in_storage():
+    """Every reader of a partition count goes through
+    storage.planned_partitions, so none of them can run a job."""
+    hits = [
+        str(f.relative_to(REPO))
+        for top in ("unstructured_spark", "entry_queries")
+        for f in sorted(pathlib.Path(REPO, top).rglob("*.py"))
+        if "rdd.getNumPartitions()" in f.read_text()
+    ]
+    assert hits == ["unstructured_spark/operators/storage.py"]
 
 
 # --- r13: ngram_jaccard_pairs staged shingle projection -------------------

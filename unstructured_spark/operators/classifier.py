@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from unstructured_spark.operators.storage import spread
 from unstructured_spark.operators.text_analysis import _bucket, _features, fxln_steps
 
 
@@ -47,15 +48,9 @@ def _doc_buckets(
         # document head — feature volume, and with it the md5 hash +
         # explode + count cost, becomes O(docs), not O(corpus tokens)
         toks = F.slice(toks, 1, int(max_tokens))
-    # small-file inputs arrive as 1 split: spread the md5-per-feature
-    # fan-out (the dominant map-side cost) across the cluster; identity
-    # — no exchange — when the scan already parallelizes (same
-    # scale-adaptive rebalance as dedup.minhash_signatures)
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        df = df.repartition(parallelism)
+    # spread: the md5-per-feature fan-out is the dominant map-side cost
     return (
-        df.select(F.col(doc_id).alias("doc_id"), toks.alias("_t"))
+        spread(df).select(F.col(doc_id).alias("doc_id"), toks.alias("_t"))
         .select("doc_id", F.explode(_features(F.col("_t"))).alias("g"))
         .select("doc_id", _bucket(F.col("g"), buckets).alias("b"))
     )

@@ -45,6 +45,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from unstructured_spark.operators.storage import planned_partitions
+
 MATCH_SCHEMA = "cls string, score double, iou_threshold double, tp int"
 
 DEFAULT_IOU_THRESHOLDS = (0.5, 0.75)
@@ -157,13 +159,14 @@ def match_detections(
     # widths; for a small-fixture single-split input (bench parquet)
     # the extra tasks are pure per-task Python round-trip overhead, so
     # the multiplier scales with the input's own split count instead
-    # (measured 0.75x at sf0.1 with 1 split -> 32 buckets vs 128)
+    # (measured 0.75x at sf0.1 with 1 split -> 32 buckets vs 128); an
+    # unknown count sizes to full width
     par = pred.sparkSession.sparkContext.defaultParallelism
     if num_buckets:
         nb = num_buckets
     else:
-        in_parts = max(pred.rdd.getNumPartitions(), 1)
-        nb = min(4 * par, max(par, in_parts * 4))
+        in_parts = planned_partitions(pred)
+        nb = 4 * par if in_parts is None else min(4 * par, max(par, in_parts * 4))
     bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(nb))
     pred_b = _fresh(pred, pcols).withColumn("_b", bucket).repartition(nb, "_b")
     gt_b = _fresh(gt, gcols).withColumn("_b", bucket).repartition(nb, "_b")

@@ -27,6 +27,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from unstructured_spark.operators.storage import planned_partitions, spread
 from unstructured_spark.schema import ELEMENT_SCHEMA
 
 _OUT_COLUMNS = [f.name for f in ELEMENT_SCHEMA.fields]
@@ -83,13 +84,14 @@ def _size_parse_tasks(narrowed: DataFrame) -> DataFrame:
     tasks. The estimate is the optimizer's, so it runs no job; an
     unknown size reads as Long.MaxValue and never coalesces, nor does a
     scan whose bytes fill its splits. Inputs with fewer splits than
-    cores (one parquet file is one split) spread to defaultParallelism.
+    cores, or an unknown count (a stream, an adaptive plan), go to
+    :func:`storage.spread` instead.
     """
     spark = narrowed.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    n = narrowed.rdd.getNumPartitions()
-    if n < parallelism:
-        return narrowed.repartition(parallelism)
+    n = planned_partitions(narrowed)
+    if n is None or n < parallelism:
+        return spread(narrowed)
     plan = narrowed._jdf.queryExecution().optimizedPlan()
     estimate = int(plan.stats().sizeInBytes())
     split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
@@ -132,10 +134,7 @@ def partition_documents(
         cols.append(path)
     if content_type and content_type in df.columns:
         cols.append(content_type)
-    narrowed = df.select(*cols)
-    # streaming microbatches manage their own partitioning — no .rdd
-    if not df.isStreaming:
-        narrowed = _size_parse_tasks(narrowed)
+    narrowed = _size_parse_tasks(df.select(*cols))
     path_col = path if path in narrowed.columns else None
     ct_col = content_type if content_type in narrowed.columns else None
 

@@ -20,6 +20,8 @@ are **written pre-clustered**:
   the resulting plans testable — the repo's tests pin the zero-shuffle
   property so a regression fails CI rather than costing a 100 TB
   shuffle in production.
+- ``spread`` is the one small-input rebalance rule, decided from the
+  plan (``planned_partitions``) without running a job.
 
 The bucket count is a layout contract: pick ``num_buckets`` ≈ corpus
 size / (executor-digestible split), and keep it IDENTICAL across
@@ -89,6 +91,38 @@ def count_exchanges(df: DataFrame) -> int:
         for line in plan.splitlines()
         if "Exchange" in line and "BroadcastExchange" not in line
     )
+
+
+def planned_partitions(df: DataFrame) -> int | None:
+    """The partition count ``df`` will run with, read without running a
+    job, or None when only the run can tell: a streaming frame, or an
+    ``AdaptiveSparkPlan`` (under AQE, any plan with an exchange, an
+    aggregate, a join, a window or a cached relation), whose output AQE
+    sizes from its query stages and whose ``rdd`` runs those stages to
+    answer."""
+    if df.isStreaming:
+        return None
+    if df._jdf.queryExecution().executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return None
+    return df.rdd.getNumPartitions()
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` round-robin repartitioned to ``defaultParallelism`` when it
+    is known to have fewer partitions, else ``df`` unchanged.
+
+    A small file is one split (a single-row-group parquet file, a
+    handful of text files), so the stage above its scan runs on one
+    core while the others idle. A real corpus scan has at least as many
+    splits as cores, so this is an identity there and no exchange
+    enters the plan; the results never depend on which way it goes. An
+    input whose count is unknown (see :func:`planned_partitions`) keeps
+    its partitioning: AQE sizes it at run time, and counting it here
+    would run its upstream stages at build time and again at the
+    action."""
+    n = planned_partitions(df)
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if n is not None and n < par else df
 
 
 def assert_no_shuffle(df: DataFrame, context: str = "") -> None:

@@ -20,6 +20,7 @@ from unstructured_spark.operators.dedup import (
     shingles_from_tokens,
     token_hash,
 )
+from unstructured_spark.operators.storage import spread
 
 # Common English stopwords used for quality scoring.
 STOPWORDS = (
@@ -296,19 +297,14 @@ def winnow_fingerprints(
 
     Returns (doc_id, fp_hash) — one row per selected distinct hash.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartition(par)
-        if df.rdd.getNumPartitions() < par
-        else df
-    )
     toks = F.filter(
         F.split(
             F.lower(F.trim(F.regexp_replace(F.col(text), "\\s+", " "))), " "
         ),
         lambda t: t != "",
     )
-    staged = base.select(
+    # spread: the md5 k-gram hashing per token position dominates
+    staged = spread(df).select(
         F.col(doc_id).alias("doc_id"), toks.alias("_t")
     ).filter(F.size("_t") >= k)
     staged = staged.select("doc_id", _gram_hashes(F.col("_t"), k).alias("_h"))

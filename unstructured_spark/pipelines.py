@@ -323,9 +323,6 @@ def pretraining_corpus_e2e(
     dkw = {"n": 3, "threshold": 0.5}
     dkw.update(dedup_kwargs or {})
     chunks = drop_near_duplicates(chunks, doc_id="element_id", text="text", **dkw)
-    # the dedup survivors feed two consumers (split assignment + the
-    # join back); checkpoint so the partition/chunk/hygiene tree runs once
-    chunks = chunks.localCheckpoint(eager=False)
 
     assignment = leakage_safe_split(
         chunks, doc_id="element_id", fractions=split_fractions

@@ -1,6 +1,7 @@
 """SparkSession factory with scale-appropriate defaults.
 
-Defaults are tuned so the same code runs on local[32] for tests and on a
+Defaults are tuned so the same code runs on ``local[N]`` (N from
+``SPARK_GRAFT_CPUS``, default one per core) for tests and on a
 multi-executor cluster unchanged: AQE on (runtime shuffle re-planning,
 skew-join splitting), Arrow on (vectorized pandas-UDF transfer), UTC
 session timezone (determinism vs oracle engines), and a shuffle
@@ -103,7 +104,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
