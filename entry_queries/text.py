@@ -1392,7 +1392,9 @@ def q_bloom_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = docs.filter(F.col("doc_id") % 2 == 0)
     new = docs.filter(F.col("doc_id") % 2 == 1)
     bloom = dedup.bloom_fingerprint_index(hist, m_bits=1 << 16, k=4)
-    return dedup.bloom_probe_new(new, bloom, m_bits=1 << 16, k=4)
+    return dedup.bloom_probe_new(new, bloom, m_bits=1 << 16, k=4).select(
+        "doc_id", "maybe_seen"
+    )
 
 
 def _quality_ntok_base(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -96,65 +96,30 @@ class TestNbClassifier:
         out = nb_classify(corpus, _seed(spark), buckets=128).collect()
         assert [r["doc_id"] for r in out] == [10]
 
-    def test_stream_scorer_matches_batch(self, spark):
-        # the map-only streaming twin must be BIT-identical to the
-        # aggregation path — tricky inputs: unicode whitespace (Java \s
-        # is ASCII-only), leading tabs, multi-space runs, empty text
-        from unstructured_spark.operators.classifier import nb_score_stream
-
-        seed = _seed(spark)
+    def test_nb_score_pins_tricky_corpus(self, spark):
+        # exact BIGINT scores over tricky inputs: a unicode NBSP (Java
+        # \s is ASCII-only, so it stays inside a token), leading and
+        # inner tabs, a multi-space run, a trailing space, a repeated
+        # token, and empty text (no features: dropped)
         corpus = spark.createDataFrame(
             [
                 (10, "clean prose with data and science content"),
-                (11, "click here for free casino pills"),
+                (11, "click here for free casino\u00a0pills"),
                 (12, "\tdata  science\tprose "),
                 (13, ""),
                 (14, "casino casino casino data"),
             ],
             "doc_id long, text string",
         )
-        model = nb_train(seed, buckets=256)
-        batch = sorted(
-            (str(r["doc_id"]), r["predicted"], r["score_q"], r["margin_q"])
-            for r in nb_score(corpus, model, buckets=256).collect()
-        )
-        stream_form = sorted(
-            tuple(r)
-            for r in nb_score_stream(corpus, model, buckets=256).collect()
-        )
-        assert stream_form == batch
-
-    def test_stream_scorer_runs_on_a_real_stream(self, spark, tmp_path):
-        import pyspark.sql.functions as SF
-
-        from unstructured_spark.operators.classifier import nb_score_stream
-
-        src = tmp_path / "src"
-        src.mkdir()
-        spark.createDataFrame(
-            [(10, "clean prose with data and science content"),
-             (11, "click here for free casino pills")],
-            "doc_id long, text string",
-        ).write.parquet(str(src), mode="overwrite")
         model = nb_train(_seed(spark), buckets=256)
-        stream = spark.readStream.schema("doc_id long, text string").parquet(
-            str(src)
-        )
-        scored = nb_score_stream(stream, model, buckets=256)
-        assert scored.isStreaming
-        q = (
-            scored.writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        out = {
-            r["doc_id"]: r["predicted"]
-            for r in spark.read.parquet(str(tmp_path / "out")).collect()
-        }
-        assert out == {"10": "keep", "11": "spam"}
+        scored = nb_score(corpus, model, buckets=256)
+        assert scored.columns == ["doc_id", "predicted", "score_q", "margin_q"]
+        assert sorted(tuple(r) for r in scored.collect()) == [
+            (10, "keep", -146888385264, 6770581872),
+            (11, "spam", -103706832196, 6687256828),
+            (12, "keep", -57526048188, 3053467692),
+            (14, "spam", -79222088720, 1016674296),
+        ]
 
     def test_deterministic_tie_breaks_to_smaller_label(self, spark):
         # identical class evidence: two single-doc classes with the SAME

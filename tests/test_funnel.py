@@ -65,7 +65,9 @@ class TestFunnel:
         got = {r["step"]: r["users"] for r in funnel_summary(per_user, 3).collect()}
         assert got == {1: 3, 2: 2, 3: 1}
 
-    def test_strategies_agree(self, spark):
+    def test_tricky_events_pinned(self, spark):
+        # out-of-order steps, a step past the window, no first step,
+        # equal timestamps and a repeated first step in one frame
         ev = _ev(
             spark,
             [
@@ -76,18 +78,17 @@ class TestFunnel:
                 (5, 0, "view"), (5, 100, "view"), (5, 110, "click"),
             ],
         )
-        kw = dict(within_seconds=3600)
-        a = sorted(
-            funnel(ev, ["view", "click", "purchase"], strategy="window", **kw)
-            .collect(),
-            key=lambda r: r["user_id"],
-        )
-        b = sorted(
-            funnel(ev, ["view", "click", "purchase"], strategy="collect", **kw)
-            .collect(),
-            key=lambda r: r["user_id"],
-        )
-        assert [r.asDict() for r in a] == [r.asDict() for r in b]
+        rows = funnel(ev, ["view", "click", "purchase"], within_seconds=3600)
+        assert rows.columns == ["user_id", "t1", "t2", "t3", "stage"]
+        t0 = int(T0.timestamp()) * 1_000_000
+        s = 1_000_000
+        got = sorted(tuple(r) for r in rows.collect())
+        assert got == [
+            (1, t0, t0 + 10 * s, None, 2),
+            (2, t0, t0 + 60 * s, None, 2),
+            (4, t0, t0, t0 + 1 * s, 3),
+            (5, t0, t0 + 110 * s, None, 2),
+        ]
 
     def test_default_plan_has_no_collect_list_and_one_exchange(self, spark):
         # the scale contract: the default funnel never materializes a

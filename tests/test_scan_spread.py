@@ -37,8 +37,11 @@ from unstructured_spark.operators.storage import planned_partitions, spread  # n
 from unstructured_spark.schema import ELEMENT_COLUMNS  # noqa: E402
 
 
-def _docs(spark, n_parts):
-    base = spark.range(0, 120).select(
+def _docs(spark, n_parts, *, scan=False):
+    """120 docs in ``n_parts`` partitions: one split, or a round-robin
+    exchange over the range. With ``scan`` the range scan itself has
+    ``n_parts`` splits and nothing sits on top of it."""
+    base = spark.range(0, 120, numPartitions=n_parts if scan else None).select(
         F.col("id").alias("doc_id"),
         F.concat_ws(
             " ",
@@ -50,6 +53,8 @@ def _docs(spark, n_parts):
         ).alias("text"),
         (F.col("id") % 4).cast("string").alias("source"),
     )
+    if scan:
+        return base
     return base.coalesce(1) if n_parts == 1 else base.repartition(n_parts)
 
 
@@ -57,11 +62,30 @@ def _rows(df):
     return sorted(tuple(str(x) for x in r) for r in df.collect())
 
 
-def test_simhash_spread_identity_when_input_parallelizes(spark):
+def test_simhash_spread_identity_when_input_parallelizes(spark, monkeypatch):
+    """``simhash_pairs`` checkpoints the spread frame, so the plan to read
+    is the one handed to ``localCheckpoint``: over a scan with more
+    splits than cores it has no round-robin exchange; over one split it
+    has one."""
+    # the class PySpark 4.1 instantiates; patching pyspark.sql.DataFrame
+    # intercepts nothing
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    checkpointed = []
+    real = ClassicDataFrame.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        checkpointed.append(self._jdf.queryExecution().sparkPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", record)
     p = spark.sparkContext.defaultParallelism
-    docs = _docs(spark, p)  # already >= defaultParallelism partitions
-    plan = dedup.simhash_pairs(docs, bits=48, max_distance=2)._jdf.queryExecution().sparkPlan().toString()
-    assert "RoundRobinPartitioning" not in plan
+    dedup.simhash_pairs(_docs(spark, 2 * p, scan=True), bits=48, max_distance=2)
+    assert len(checkpointed) == 1
+    assert "RoundRobinPartitioning" not in checkpointed[0]
+    dedup.simhash_pairs(_docs(spark, 1), bits=48, max_distance=2)
+    assert len(checkpointed) == 2
+    assert "RoundRobinPartitioning" in checkpointed[1]
 
 
 def test_simhash_results_identical_across_input_splits(spark):

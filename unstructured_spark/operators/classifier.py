@@ -319,109 +319,3 @@ def nb_classify(
         .alias("margin_q"),
     )
 
-
-NB_SCORE_SCHEMA = (
-    "doc_id string, predicted string, score_q bigint, margin_q bigint"
-)
-
-
-def nb_score_stream(
-    corpus: DataFrame,
-    model: DataFrame,
-    *,
-    text: str = "text",
-    doc_id: str = "doc_id",
-    buckets: int = 4096,
-    max_tokens: int | None = None,
-) -> DataFrame:
-    """Map-only scoring twin of :func:`nb_score` for Structured
-    Streaming (and for batch jobs that want zero shuffles): the dense
-    model (|classes| × ``buckets`` rows — tiny by construction) is
-    collected once and broadcast; each Arrow batch scores its documents
-    in pure Python integers.
-
-    Bit-identical to ``nb_score`` by construction — the score is an
-    exact BIGINT sum either way — and parity-pinned by
-    ``tests/test_classifier.py``. The tokenizer mirrors the column
-    path's Java regex semantics exactly: ``trim`` strips ASCII spaces
-    only, ``\\s`` is the ASCII class (Java default), features are
-    unigrams + '_'-joined bigrams, buckets are the first 15 md5 hex
-    digits mod ``buckets``.
-
-    ``nb_score`` chains three aggregations, which Structured Streaming
-    cannot run in append mode; this form is a single stateless
-    ``mapInPandas`` — watermarks, append sinks, and availableNow drains
-    all compose with it. doc_id is emitted as STRING (the stream's
-    stable schema); docs with zero features are dropped, same as the
-    batch path.
-    """
-    import pandas as pd
-
-    rows = model.select("cls", "b", "lq", "prior_q").collect()
-    lq: dict = {}
-    prior: dict = {}
-    for r in rows:
-        lq[(r["cls"], int(r["b"]))] = int(r["lq"])
-        prior[r["cls"]] = int(r["prior_q"])
-    classes = sorted(prior)
-    bc = corpus.sparkSession.sparkContext.broadcast((lq, prior, classes))
-    nb = int(buckets)
-    mt = max_tokens
-
-    def run(batches):
-        import hashlib
-        import re
-        from functools import lru_cache
-
-        ascii_ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        lq_m, prior_m, classes_m = bc.value
-
-        # Zipf repetition: the same unigrams/bigrams recur constantly —
-        # memoize their md5 bucket per worker (bounded cache)
-        @lru_cache(maxsize=131072)
-        def bucket(g: str) -> int:
-            return int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % nb
-
-        for pdf in batches:
-            out = []
-            for did, txt in zip(pdf[doc_id], pdf[text]):
-                toks = [
-                    t
-                    for t in ascii_ws.split(("" if txt is None else str(txt)).strip(" "))
-                    if t != ""
-                ]
-                if mt is not None:
-                    toks = toks[:mt]
-                feats = toks + [
-                    f"{toks[i]}_{toks[i + 1]}" for i in range(len(toks) - 1)
-                ]
-                if not feats:
-                    continue
-                cd: dict = {}
-                for g in feats:
-                    b = bucket(g)
-                    cd[b] = cd.get(b, 0) + 1
-                scores = [
-                    (
-                        prior_m[c]
-                        + sum(n * lq_m[(c, b)] for b, n in cd.items()),
-                        c,
-                    )
-                    for c in classes_m
-                ]
-                # tie → smaller label: max on score, then min on label
-                top = max(s[0] for s in scores)
-                winner = sorted(c for s, c in scores if s == top)[0]
-                margin = (
-                    0
-                    if len(scores) < 2
-                    else top - max(s for s, c in scores if c != winner)
-                )
-                out.append((str(did), winner, top, margin))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "predicted", "score_q", "margin_q"]
-            )
-
-    return corpus.select(
-        F.col(doc_id).alias(doc_id), F.col(text).alias(text)
-    ).mapInPandas(run, NB_SCORE_SCHEMA)

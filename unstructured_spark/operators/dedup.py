@@ -1426,8 +1426,9 @@ def bloom_fingerprint_index(
     an anti-join shuffle against history.
 
     The probe (:func:`bloom_probe_new`) is then MAP-ONLY over the new
-    batch: no shuffle touches history at all, the right cost shape for
-    a 100 TB-history / small-batch incremental dedup gate. One-sided
+    batch or stream — ``k`` broadcast joins of this table, no shuffle,
+    no aggregate — the right cost shape for a 100 TB-history /
+    small-batch incremental dedup gate. One-sided
     error: ``maybe_seen=false`` is definitive (guaranteed-new docs can
     skip the exact index entirely); ``maybe_seen=true`` rows — a
     deterministic false-positive fraction ≈ (1−e^{−kn/m})^k of the
@@ -1483,135 +1484,43 @@ def bloom_probe_new(
     bloom: DataFrame,
     *,
     text: str = "text",
-    doc_id: str = "doc_id",
     m_bits: int = 1 << 20,
     k: int = 4,
     seed: str = "bloom-v1",
 ) -> DataFrame:
-    """Probe a batch against a :func:`bloom_fingerprint_index` built
-    with the SAME (m_bits, k, seed). Returns the batch keys plus
-    ``maybe_seen``: false = definitively new (safe to skip the exact
-    history anti-join), true = present in the filter (an exact check
-    decides). NULL-text docs probe as ``maybe_seen=false`` (they carry
-    no fingerprint; the exact path passes them through too).
+    """Probe ``new_docs`` against a :func:`bloom_fingerprint_index`
+    built with the SAME (m_bits, k, seed). Returns every input column
+    plus ``maybe_seen``, one row per input row: false = definitively
+    new (safe to skip the exact history anti-join), true = present in
+    the filter (an exact check decides). NULL-text docs probe as
+    ``maybe_seen=false`` (they carry no fingerprint; the exact path
+    passes them through too).
 
-    Scale shape: the filter is broadcast (≤ m_bits/32 rows by
-    construction), the probe is explode → broadcast join → one
-    groupBy(doc) — the batch is shuffled once on its own doc ids,
-    history never.
+    Map-only, so one rule serves a batch and a stream (append sinks,
+    watermarks, availableNow drains): each of the ``k`` bit positions
+    is a left equi-join of the broadcast filter (≤ m_bits/32 rows by
+    construction) on its word. No explode, no aggregate, no collect —
+    the probed side is never shuffled. A stream re-reads a static
+    ``bloom`` in every micro-batch, so hand it the persisted filter
+    table, not a build over history.
     """
     staged = new_docs.select(
-        F.col(doc_id).alias("doc"), fingerprint(F.col(text)).alias("_fp")
-    )
-    probes = staged.filter(F.col("_fp").isNotNull()).select(
-        "doc",
-        F.explode(_bloom_positions(F.col("_fp"), m_bits, k, seed)).alias(
-            "_pos"
-        ),
-    )
-    hits = (
-        probes.select("doc", F.expr("_pos div 32").alias("word"),
-                      F.expr("cast(_pos % 32 as int)").alias("_b"))
-        .join(F.broadcast(bloom), "word", "left")
-        .select(
-            "doc",
-            (
-                F.expr("(coalesce(bits, 0) >> _b) & 1") == F.lit(1)
-            ).alias("_hit"),
+        "*", fingerprint(F.col(text)).alias("_fp")
+    ).withColumn("_pos", _bloom_positions(F.col("_fp"), m_bits, k, seed))
+    seen = F.col("_fp").isNotNull()
+    for j in range(int(k)):
+        word = bloom.select(
+            F.col("word").alias(f"_w{j}"), F.col("bits").alias(f"_b{j}")
         )
-        .groupBy("doc")
-        .agg(F.min(F.col("_hit").cast("int")).alias("_all"))
-    )
-    return (
-        staged.select("doc")
-        .distinct()
-        .join(hits, "doc", "left")
-        .select(
-            F.col("doc").alias(doc_id),
-            (F.coalesce(F.col("_all"), F.lit(0)) == F.lit(1)).alias(
-                "maybe_seen"
-            ),
+        staged = staged.join(
+            F.broadcast(word),
+            F.expr(f"_pos[{j}] div 32") == F.col(f"_w{j}"),
+            "left",
         )
-    )
-
-
-def bloom_probe_stream(
-    new_docs: DataFrame,
-    bloom: DataFrame,
-    *,
-    text: str = "text",
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    seed: str = "bloom-v1",
-) -> DataFrame:
-    """Map-only streaming twin of :func:`bloom_probe_new`: the sparse
-    (word, bits) filter — ≤ m_bits/32 rows by construction — is
-    collected once and broadcast; each Arrow batch probes in pure
-    Python integers. Stateless ``mapInPandas``, so it composes with
-    append sinks, watermarks, and availableNow drains (the aggregation
-    in the batch form does not). Bit-identical verdicts to the batch
-    probe by construction — same md5 positions, same bit tests —
-    pinned by ``tests/test_dedup_cap.py``.
-
-    The streaming incremental-dedup front door: stream → this gate →
-    only ``maybe_seen`` rows (a tiny fraction) proceed to the exact
-    index anti-join; guaranteed-new rows flow through shuffle-free
-    (see ``streaming.dedup.exact_dedup_stream_against_index``). A
-    pass-through gate: emits every input column unchanged plus
-    ``maybe_seen``.
-    """
-    import pandas as pd
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    words = {int(r["word"]): int(r["bits"]) for r in bloom.collect()}
-    bc = new_docs.sparkSession.sparkContext.broadcast(words)
-    m, kk, sd = int(m_bits), int(k), str(seed)
-    # copy the field list: StructType.add MUTATES, and new_docs.schema
-    # is the DataFrame's cached schema object — mutating it makes the
-    # source frame claim a column it doesn't have
-    out_schema = StructType(
-        list(new_docs.schema.fields)
-        + [StructField("maybe_seen", BooleanType())]
-    )
-
-    def run(batches):
-        import hashlib
-        import re
-
-        # ASCII \s, matching the column path's Java regex semantics
-        # (same mirror discipline as nb_score_stream); SQL trim() strips
-        # ONLY the space char, so .strip(" ") — not Java String.trim
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        table = bc.value
-
-        def fp(txt):
-            if txt is None:
-                return None
-            norm = ws.sub(" ", str(txt)).strip(" ").lower()
-            return hashlib.md5(norm.encode()).hexdigest()
-
-        def probe(txt):
-            f = fp(txt)
-            if f is None:
-                return False
-            for j in range(kk):
-                pos = (
-                    int(
-                        hashlib.md5(f"{f}:{j}:{sd}".encode()).hexdigest()[:15],
-                        16,
-                    )
-                    % m
-                )
-                if not (table.get(pos // 32, 0) >> (pos % 32)) & 1:
-                    return False
-            return True
-
-        for pdf in batches:
-            res = pdf.copy()
-            res["maybe_seen"] = [probe(t) for t in pdf[text]]
-            yield res
-
-    return new_docs.mapInPandas(run, out_schema)
+        seen = seen & F.expr(
+            f"((coalesce(_b{j}, 0) >> cast(_pos[{j}] % 32 as int)) & 1) = 1"
+        )
+    return staged.select(*new_docs.columns, seen.alias("maybe_seen"))
 
 
 def remove_boilerplate_lines(

@@ -14,18 +14,15 @@ engine, instead of a sort-order-dependent scan):
 
 Users who never reach step 1 are omitted.
 
-Scale shape (default ``strategy="window"``): ONE shuffle — an exchange
-on user — then every tᵢ is a conditional-min WINDOW aggregate over the
-user partition (``min(when(et = step_i and us between tᵢ₋₁ and t₁+w,
-us)) over (partition by user)``); tᵢ₋₁ is a per-user-constant column
-from the previous window, so the chain needs no per-user array and no
-further shuffle (the final per-user collapse re-uses the same hash
+Scale shape: ONE shuffle — an exchange on user — then every tᵢ is a
+conditional-min WINDOW aggregate over the user partition
+(``min(when(et = step_i and us between tᵢ₋₁ and t₁+w, us)) over
+(partition by user)``); tᵢ₋₁ is a per-user-constant column from the
+previous window, so the chain needs no per-user array and no further
+shuffle (the final per-user collapse re-uses the same hash
 partitioning). A hot user with 10⁸ events SPILLS through the window
 sorter instead of materializing one 10⁸-element ``collect_list`` array
 in a single task's heap — that is the property that survives 100 TB.
-``strategy="collect"`` keeps the previous array form: marginally
-faster when per-user event counts are known-small (no window buffer),
-same results, per-key-bounded like the sessionizer.
 
 Timestamps compare as epoch microseconds (bigint) so engine timestamp
 semantics never enter the comparison.
@@ -33,7 +30,7 @@ semantics never enter the comparison.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -46,34 +43,20 @@ def funnel(
     user: str = "user_id",
     ts: str = "ts",
     etype: str = "event_type",
-    strategy: str = "window",
 ) -> DataFrame:
     """Per-user funnel progression: (user_id, t1..tk as epoch-micros,
     stage) where stage = number of steps reached (≥1)."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least two steps")
-    if strategy not in ("window", "collect"):
-        raise ValueError(f"unknown funnel strategy {strategy!r}")
     w_us = int(within_seconds) * 1_000_000
     ev = events.select(
         F.col(user).alias("user_id"),
         F.unix_micros(F.col(ts)).alias("us"),
         F.col(etype).alias("et"),
     )
-    if strategy == "collect":
-        cur = _funnel_collect(ev, steps, w_us)
-    else:
-        cur = _funnel_window(ev, steps, w_us)
-    stage = F.lit(1)
-    for i in range(2, len(steps) + 1):
-        stage = stage + F.col(f"t{i}").isNotNull().cast("int")
-    return cur.withColumn("stage", stage.cast("bigint"))
-
-
-def _funnel_window(ev: DataFrame, steps: list[str], w_us: int) -> DataFrame:
-    """Conditional-min window chain: no per-user arrays, spill-safe on
-    hot users. All windows share partitionBy(user) with no orderBy, so
-    one exchange feeds every WindowExec and the closing groupBy."""
+    # conditional-min window chain: every window shares
+    # partitionBy(user) with no orderBy, so one exchange feeds every
+    # WindowExec and the closing groupBy
     wu = Window.partitionBy("user_id")
     cur = ev.withColumn(
         "t1",
@@ -96,42 +79,11 @@ def _funnel_window(ev: DataFrame, steps: list[str], w_us: int) -> DataFrame:
     tcols = [f"t{i}" for i in range(1, len(steps) + 1)]
     # per-user constants → min() collapses to the value; same hash
     # partitioning as the windows, so no second exchange
-    return cur.groupBy("user_id").agg(
-        *[F.min(c).alias(c) for c in tcols]
-    )
-
-
-def _funnel_collect(ev: DataFrame, steps: list[str], w_us: int) -> DataFrame:
-    """Array form: one collect_list per user, min-chain via
-    array_min(filter(...)). Bounded by the largest single user."""
-    g = ev.groupBy("user_id").agg(
-        F.collect_list(F.struct("us", "et")).alias("evs")
-    )
-    cur = g.select(
-        "user_id",
-        "evs",
-        F.array_min(
-            F.filter(F.col("evs"), lambda e: e["et"] == steps[0]).getField("us")
-        ).alias("t1"),
-    ).filter(F.col("t1").isNotNull())
-    for i, step in enumerate(steps[1:], start=2):
-        prev = F.col(f"t{i - 1}")
-        deadline = F.col("t1") + F.lit(w_us)
-        cur = cur.select(
-            "*",
-            F.when(
-                prev.isNotNull(),
-                F.array_min(
-                    F.filter(
-                        F.col("evs"),
-                        lambda e: (e["et"] == step)
-                        & (e["us"] >= prev)
-                        & (e["us"] <= deadline),
-                    ).getField("us")
-                ),
-            ).alias(f"t{i}"),
-        )
-    return cur.drop("evs")
+    cur = cur.groupBy("user_id").agg(*[F.min(c).alias(c) for c in tcols])
+    stage = F.lit(1)
+    for i in range(2, len(steps) + 1):
+        stage = stage + F.col(f"t{i}").isNotNull().cast("int")
+    return cur.withColumn("stage", stage.cast("bigint"))
 
 
 def funnel_summary(per_user: DataFrame, num_steps: int) -> DataFrame:

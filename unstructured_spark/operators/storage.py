@@ -429,14 +429,13 @@ def validate_dataset(spark: SparkSession, path: str, *, text: str = "text") -> d
 
 
 def _diff_fp(text: str):
-    """The snapshot-diff fingerprint: whitespace-normalized case-folded
-    md5, NULL text folded to the empty string — shared by
-    :func:`corpus_diff` and :func:`corpus_diff_summary` so the two can
-    never drift apart."""
-    return F.md5(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text), F.lit("")),
-                                        "\\s+", " ")))
-    )
+    """The snapshot-diff fingerprint: ``dedup.fingerprint`` with NULL
+    text folded to the empty string — shared by :func:`corpus_diff` and
+    :func:`corpus_diff_summary` so the two can never drift apart."""
+    # imported here: dedup imports this module's spread
+    from unstructured_spark.operators.dedup import fingerprint
+
+    return fingerprint(F.coalesce(F.col(text), F.lit("")))
 
 
 def corpus_diff(

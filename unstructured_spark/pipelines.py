@@ -378,6 +378,7 @@ def filter_attribution(
     fingerprint partitioning (``doc != min(doc) over fp``), so the
     whole report costs exactly one shuffle.
     """
+    from unstructured_spark.operators.dedup import fingerprint
     from unstructured_spark.operators.pii import pii_total_expr
     from unstructured_spark.operators.quality_filters import (
         c4_doc_keep_expr,
@@ -391,9 +392,7 @@ def filter_attribution(
     # the others, and pii_total goes NEGATIVE via size(NULL) = -1
     # under the legacy sizeOfNull default
     safe_text = F.coalesce(F.col(text), F.lit(""))
-    fp = F.md5(
-        F.lower(F.trim(F.regexp_replace(safe_text, "\\s+", " ")))
-    )
+    fp = fingerprint(safe_text)
     staged = df.select(
         F.col(doc_id).alias("doc_id"),
         *[c.alias(n) for n, c in gopher_stats_exprs(text).items()],

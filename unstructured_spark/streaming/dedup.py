@@ -301,9 +301,9 @@ def exact_dedup_stream_against_index(
     duplicates are not collapsed — chain :func:`dedup_stream`
     upstream, same contract as the near-dup form above.
     """
-    from unstructured_spark.operators.dedup import bloom_probe_stream
+    from unstructured_spark.operators.dedup import bloom_probe_new
 
-    gated = bloom_probe_stream(
+    gated = bloom_probe_new(
         docs, bloom, text=text, m_bits=m_bits, k=k, seed=seed
     )
     definite = gated.filter(~F.col("maybe_seen")).drop("maybe_seen")

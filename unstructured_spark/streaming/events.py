@@ -167,7 +167,7 @@ def _funnel_fold(
 def _funnel_chain(state: tuple, w_us: int) -> list:
     """Recompute (t1..tk) from folded state: t_i = min step-i candidate
     in [t_{i-1}, t1 + w_us] — identical to the batch conditional-min
-    window chain (operators/funnel._funnel_window)."""
+    window chain (operators/funnel.funnel)."""
     t1, *cands = state
     ts = [t1]
     deadline = None if t1 is None else t1 + w_us

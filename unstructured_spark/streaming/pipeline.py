@@ -97,13 +97,14 @@ def stream_to_token_shards(
     available_now: bool = False,
 ) -> StreamingQuery:
     """The streaming DATA-LOADER tail: chunk stream → NB classifier
-    gate → token-balanced shard assignment → parquet shards. The
-    round-8 streaming primitives (map-only NB scorer, distributed
-    prefix-sum sharding) composed end-to-end.
+    gate → token-balanced shard assignment → parquet shards: the
+    batch NB scorer and the distributed prefix-sum sharding composed
+    end-to-end over a stream.
 
     Runs as ``foreachBatch``: inside each micro-batch the chunks are
-    scored against the broadcast model (``nb_score`` — the batch twin;
-    identical integers to the streaming scorer), gated on ``keep``
+    scored against the broadcast model by :func:`nb_score`, the one
+    NB scoring rule (its three aggregations are micro-batch local, so
+    the stream needs no second scorer), gated on ``keep``
     (unscored zero-feature chunks carry the explicit ``__unscored__``
     class, same contract as pipelines.pretraining_corpus_e2e), and
     sharded with :func:`assign_token_shards` whose ``start_offset``
@@ -353,17 +354,14 @@ def attribution_stream(
     )
 
     src = docs
+    dup_col = F.lit(False)
     if bloom is not None:
-        from unstructured_spark.operators.dedup import bloom_probe_stream
+        from unstructured_spark.operators.dedup import bloom_probe_new
 
-        src = bloom_probe_stream(
+        src = bloom_probe_new(
             docs, bloom, text=text, m_bits=m_bits, k=k, seed=seed
         )
-    dup_col = (
-        F.coalesce(F.col("maybe_seen"), F.lit(False))
-        if bloom is not None
-        else F.lit(False)
-    )
+        dup_col = F.col("maybe_seen")
     staged = src.select(
         F.col(doc_id).alias("doc_id"),
         *[c.alias(n) for n, c in gopher_stats_exprs(text).items()],
@@ -507,7 +505,7 @@ def warc_record_stream(
     record_types: tuple[str, ...] | None = ("response", "conversion"),
 ) -> DataFrame:
     """Continuous crawl ingest over a watched MANIFEST directory — the
-    streaming twin of ``sources.warc.read_warc_paths`` and exactly the
+    streaming form of ``sources.warc.read_warc_paths`` and exactly the
     Common Crawl operational shape: each arriving text file lists
     archive paths (one per line, the ``warc.paths`` convention), and
     every listed shard is opened ON THE EXECUTOR and streamed through
@@ -516,15 +514,11 @@ def warc_record_stream(
     text-source checkpoint tracks which manifests are done, giving
     exactly-once shard ingest across restarts at manifest granularity.
 
-    Stateless mapInPandas — works unchanged under micro-batch
-    triggers; compose with ``main_content_stream`` and the dedup /
-    quality / partial-aggregate twins downstream."""
-    from unstructured_spark.sources.files import open_path
-    from unstructured_spark.sources.warc import (
-        WARC_SCHEMA,
-        _record_row,
-        iter_warc_records_stream,
-    )
+    The records come from ``read_warc_paths`` itself (stateless
+    mapInPandas), so a stream and a batch share one read loop and one
+    record filter; compose with ``main_content_stream`` and the dedup /
+    quality / partial-aggregate operators downstream."""
+    from unstructured_spark.sources.warc import read_warc_paths
 
     reader = (
         spark.readStream.format("text")
@@ -535,30 +529,7 @@ def warc_record_stream(
     paths = reader.load(manifest_dir).select(
         F.trim(F.col("value")).alias("path")
     ).filter(F.col("path") != "")
-
-    opn = opener or open_path
-    wanted = tuple(t.lower() for t in record_types) if record_types else None
-    import pandas as pd
-
-    def gen(batches):
-        rows: list[dict] = []
-        cols = [f.strip().split()[0] for f in WARC_SCHEMA.split(",")]
-        for pdf in batches:
-            for path in pdf["path"]:
-                with opn(str(path)) as fh:
-                    for rec in iter_warc_records_stream(fh):
-                        row = _record_row(str(path), rec)
-                        if wanted and (
-                            row["warc_type"] or ""
-                        ).lower() not in wanted:
-                            continue
-                        rows.append(row)
-                        if len(rows) >= 512:
-                            yield pd.DataFrame(rows, columns=cols)
-                            rows = []
-        yield pd.DataFrame(rows, columns=cols)
-
-    return paths.mapInPandas(gen, WARC_SCHEMA)
+    return read_warc_paths(paths, opener=opener, record_types=record_types)
 
 
 def main_content_stream(records: DataFrame) -> DataFrame:
